@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import fsstspark.codec.{BytesCodec, LongCodec}
-import fsstspark.io.ParquetTableIO
+import fsstspark.io.{ManifestEntry, ParquetTableIO}
 import fsstspark.pipeline.EncodePipeline
 import fsstspark.util.{Keys, SortableBits}
 
@@ -67,11 +67,18 @@ import fsstspark.util.{Keys, SortableBits}
   *  - An empty projection (`count(*)`) is answered from manifest row
   *    counts without opening any data file.
   *
-  * Planning collects the pruned manifest hit list to the driver — the
+  * Planning rule: a table with at most
+  * [[ParquetTableIO.DriverManifestMaxBatches]] committed batches whose
+  * manifest and tombstone files total at most
+  * [[ParquetTableIO.DriverManifestMaxBytes]] is planned from the
+  * driver-side snapshot ([[ParquetTableIO.manifestRows]]) — no Spark job
+  * for metadata, so a point read runs exactly one job. A larger manifest
+  * keeps the pushed-down collect of the pruned hit list — the
   * same metadata-sized collect as [[ParquetTableIO.chunksForKey]] (one
-  * row per surviving chunk × read column, no blobs). Committed-batch and
-  * tombstone filtering ride on [[ParquetTableIO.manifest]], so a torn or
-  * swapped-out batch is invisible here exactly as on the typed read path.
+  * row per surviving chunk × read column, no blobs). Both paths apply the
+  * committed-batch and tombstone rules of [[ParquetTableIO.manifest]], so
+  * a torn or swapped-out batch is invisible here exactly as on the typed
+  * read path.
   */
 final class FsstDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fsst"
@@ -180,25 +187,32 @@ object FsstDataSource {
     // one codec name per column suffices for typing: value KIND is constant
     // per column (mixed byte/long codecs in one column is table corruption,
     // which the reader's codec-id validation rejects loudly).
-    // A snapshot pin infers its schema from that snapshot's manifest.
+    // A snapshot pin infers its schema from that snapshot's manifest —
+    // from the driver-side rows when the manifest is small, else with a
+    // distributed aggregate.
+    def colsOfRows(rows: Array[ManifestEntry]) =
+      rows.groupMapReduce(_.column)(_.codec)((a, _) => a).toArray.sortBy(_._1)
     def colsOf(df: org.apache.spark.sql.DataFrame) = df
       .groupBy("column").agg(org.apache.spark.sql.functions.first("codec").as("codec"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
       .sortBy(_._1)
-    var cols = colsOf(io.manifestOpt(spark, table, o.asOf))
+    val snapshot = io.manifestRows(spark, table, o.asOf)
+    var cols = snapshot.fold(colsOf(io.manifestOpt(spark, table, o.asOf)))(s => colsOfRows(s.live))
     // a fully-TRUNCATED table still resolves: deletes don't change column
     // types, so typing falls back to the manifest without tombstone
     // filtering (the ingest-ledger view) — restricted to the snapshot's
     // batches when pinned, or a `VERSION AS OF` an all-deleted snapshot
     // would type itself from columns added AFTER the snapshot
-    if (cols.isEmpty) {
-      val batches = io.committedBatchIds(spark, table)
-      val inScope = o.asOf match {
-        case Some(b) => batches.filter(_ <= b)
-        case None => batches
-      }
-      cols = colsOf(io.manifestForBatches(spark, table, inScope.toIndexedSeq))
+    if (cols.isEmpty) cols = snapshot match {
+      case Some(s) => colsOfRows(s.ingested)
+      case None =>
+        val batches = io.committedBatchIds(spark, table)
+        val inScope = o.asOf match {
+          case Some(b) => batches.filter(_ <= b)
+          case None => batches
+        }
+        colsOf(io.manifestForBatches(spark, table, inScope.toIndexedSeq))
     }
     // reachable even though tableExists passed: a catalog holding only
     // data-less delete batches has commit markers but no manifest rows
@@ -393,10 +407,13 @@ final class FsstScanBuilder(root: String, table: String, tableSchema: StructType
     */
   private lazy val everyInstanceColsV: Seq[String] = {
     val declared = tableSchema.fieldNames.drop(1).toSeq
-    FsstScan.everyInstanceCols(
-      new ParquetTableIO(root).manifestOpt(SparkSession.active, table, asOf),
-      declared, declared)
+    view.everyInstanceCols(declared, declared)
   }
+
+  /** One manifest view for both aggregate probes and the scan built
+    * here, so a query lists and reads the manifest once for all of them.
+    */
+  private lazy val view: ManifestView = ManifestView(root, table, asOf)
 
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
@@ -490,19 +507,11 @@ final class FsstScanBuilder(root: String, table: String, tableSchema: StructType
 
   /** Every chunk of every referenced column must carry zone stats, or the
     * fold would silently drop an all-null/pre-stats chunk's contribution.
-    * One metadata-sized manifest read, memoized across the support/push
-    * call pair.
+    * Memoized across the support/push call pair.
     */
   private lazy val statsCompleteCache = mutable.Map.empty[Seq[String], Boolean]
   private def statsComplete(cols: Seq[String]): Boolean =
-    statsCompleteCache.getOrElseUpdate(cols.sorted, {
-      val io = new ParquetTableIO(root)
-      val spark = SparkSession.active
-      io.manifestOpt(spark, table, asOf)
-        .filter(org.apache.spark.sql.functions.col("column").isin(cols: _*))
-        .filter(org.apache.spark.sql.functions.col("value_min").isNull)
-        .isEmpty
-    })
+    statsCompleteCache.getOrElseUpdate(cols.sorted, view.statsComplete(cols))
 
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -523,8 +532,8 @@ final class FsstScanBuilder(root: String, table: String, tableSchema: StructType
     }
 
   override def build(): Scan =
-    new FsstScan(root, table, tableSchema, required, pushed, chunksPerPartition, agg,
-      columnarMode, asOf, columnSince, rowLevel)
+    new FsstScan(root, table, tableSchema, required, pushed, chunksPerPartition, () => view,
+      agg, columnarMode, asOf, columnSince, rowLevel)
 }
 
 /** One fetched column of a partition: every chunk in the group has its
@@ -552,27 +561,26 @@ final case class AggRowPartition(values: Array[Any]) extends InputPartition
 
 final class FsstScan(root: String, table: String, tableSchema: StructType,
     required: StructType, filters: Array[Filter], chunksPerPartition: Int,
+    manifestView: () => ManifestView,
     agg: Option[(StructType, Array[AggSpec])] = None, columnarMode: String = "off",
     asOf: Option[String] = None, columnSince: Map[String, String] = Map.empty,
     rowLevel: Option[FsstRowLevelOperation] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
-  /** Every manifest read in this scan honors the snapshot pin. */
-  private def manifestDf(spark: SparkSession, io: ParquetTableIO) =
-    io.manifestOpt(spark, table, asOf)
-
-  /** Anchor-eligible columns over ONE manifest snapshot. Admission and
-    * the read that rides it must see the SAME view: `manifestOpt` pins
-    * its committed-batch set at call time, so a per-column compaction
-    * committing between an admission call and a fold over a SECOND
-    * manifestOpt call could silently shift the anchor's row set under
-    * the fold. aggRow and computePlanInner therefore derive both from
-    * one DataFrame (no cross-call memoization by design).
+  /** The ONE manifest view of this scan, shared with its builder's
+    * aggregate probes: anchor admission, the plan, every runtime-filter
+    * re-plan, the row-level victims guard and the aggregate fold all see
+    * the same committed set. A per-column compaction committing between
+    * an admission and a fold over a SECOND view could silently shift the
+    * anchor's row set under the fold.
     */
-  private def anchorColsOn(m: org.apache.spark.sql.DataFrame): Seq[String] = {
+  private lazy val view: ManifestView = manifestView()
+
+  /** Anchor-eligible columns over `view`. */
+  private def anchorCols: Seq[String] = {
     val declared = tableSchema.fieldNames.drop(1).toSeq
-    FsstScan.everyInstanceCols(m, declared, declared)
+    view.everyInstanceCols(declared, declared)
   }
 
   // ------------------------------------------ runtime group filtering
@@ -624,55 +632,33 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
   }
 
   /** Aggregate mode: fold the manifest stats into the one result row —
-    * no data file is ever opened, and the fold itself is a DISTRIBUTED
-    * aggregation over the manifest (the driver collects exactly one
-    * row — at 100 TB the previous shape collected O(chunks) stat rows).
+    * no data file is ever opened. Small manifests fold on the driver from
+    * the snapshot rows; larger ones fold as a DISTRIBUTED aggregation
+    * over the manifest (the driver collects exactly one row).
     * Exactness argument: COUNT(*) sums n_rows (nulls included, as SQL
     * counts them) over one column's chunks (every chunk carries each row
     * exactly once per column); MIN/MAX over the key fold the true
     * per-chunk key bounds — Spark's string MIN/MAX compare in UTF8String
     * binary order, which is the UTF-8 code-point order the encode side
     * recorded ([[Keys.compareUtf8]]); MIN/MAX over a long/double column
-    * fold true non-null bounds (SQL MIN/MAX ignore nulls — `min`/`max`
-    * skip the null stats of all-null chunks natively), doubles through
-    * the order-preserving SortableBits map — and the builder refused the
+    * fold true non-null bounds (SQL MIN/MAX ignore nulls — all-null
+    * chunks carry no stats and are skipped), doubles through the
+    * order-preserving SortableBits map — and the builder refused the
     * pushdown if ANY chunk lacked stats.
     */
   private def aggRow(specs: Array[AggSpec]): Array[Any] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, sum, when}
-    val spark = SparkSession.active
-    val io = new ParquetTableIO(root)
-    // ONE pinned snapshot for BOTH the anchor admission and the fold —
-    // a compaction committing between two manifestOpt calls could
-    // otherwise invalidate the anchor under the fold silently
-    val mdf = manifestDf(spark, io)
     // COUNT/key-bound folds ride a column present in EVERY live chunk
     // instance (aggSpecs refused the pushdown when none existed at
     // probe time; a concurrent rewrite since then surfaces here loudly)
-    val anchor = anchorColsOn(mdf)
+    val anchor = anchorCols
       .headOption.getOrElse(throw new IllegalStateException(
         s"table '$table': aggregate fold with no every-instance anchor column — " +
           "refused at probe time, or the layout changed under the fold " +
           "(concurrent per-column rewrite); retry the query"))
-    val aggExprs = specs.zipWithIndex.map {
-      case (CountStarSpec, i) =>
-        coalesce(sum(when(col("column") === anchor, col("n_rows"))), lit(0L)).as(s"a$i")
-      case (MinMaxSpec("key", isMin, _), i) =>
-        (if (isMin) min(when(col("column") === anchor, col("min_key")))
-         else max(when(col("column") === anchor, col("max_key")))).as(s"a$i")
-      case (MinMaxSpec(c, isMin, _), i) =>
-        (if (isMin) min(when(col("column") === c, col("value_min")))
-         else max(when(col("column") === c, col("value_max")))).as(s"a$i")
-    }
-    val row = mdf.agg(aggExprs.head, aggExprs.tail.toIndexedSeq: _*).head()
-    specs.zipWithIndex.map {
-      case (CountStarSpec, i) => java.lang.Long.valueOf(row.getLong(i))
-      case (MinMaxSpec("key", _, _), i) =>
-        if (row.isNullAt(i)) null else row.getString(i)
-      case (MinMaxSpec(_, _, dt), i) =>
-        if (row.isNullAt(i)) null
-        else if (dt == DoubleType) java.lang.Double.valueOf(SortableBits.toDouble(row.getLong(i)))
-        else java.lang.Long.valueOf(row.getLong(i))
+    view.fold(specs, anchor).zip(specs).map {
+      case (v: java.lang.Long, MinMaxSpec(_, _, DoubleType)) =>
+        java.lang.Double.valueOf(SortableBits.toDouble(v))
+      case (v, _) => v
     }
   }
 
@@ -685,15 +671,20 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     * serves it. Cached — `estimateStatistics` and `planInputPartitions`
     * both use it.
     *
-    * SCALE SHAPE: the column projection, key-range predicates, and zone
-    * predicates are applied as CATALYST filters on the manifest
-    * DataFrame BEFORE the collect ([[FsstScan.pruneManifest]]) — the
-    * manifest is parquet, so they prune at row-group level exactly like
-    * [[ParquetTableIO.chunksForKey]], and the driver collects
-    * O(surviving chunks × fetched columns) rows, never
-    * O(chunks × columns). [[FsstScan.planFromManifest]] re-applies the
-    * same predicates driver-side as a residual (idempotent) and keeps
-    * only the grouping role.
+    * SCALE SHAPE: a manifest within [[ParquetTableIO.DriverManifestMaxBytes]]
+    * and [[ParquetTableIO.DriverManifestMaxBatches]] plans from the
+    * driver-side snapshot ([[ParquetTableIO.manifestRows]]) with no
+    * metadata Spark job; [[FsstScan.planFromManifest]]'s key/zone tests
+    * do the pruning.
+    * A larger manifest keeps the pushed-down collect: the column
+    * projection, key-range predicates, and zone predicates are applied
+    * as CATALYST filters on the manifest DataFrame BEFORE the collect
+    * ([[FsstScan.pruneManifest]]) — the manifest is parquet, so they
+    * prune at row-group level exactly like [[ParquetTableIO.chunksForKey]],
+    * and the driver collects O(surviving chunks × fetched columns) rows,
+    * never O(chunks × columns); planFromManifest re-applies the same
+    * predicates as an idempotent residual. The two paths differ only in
+    * where planFromManifest's rows come from ([[ManifestView]]).
     */
   private def plan: (Array[ChunkGroupPartition], Long, Long) = {
     val p = cachedPlan
@@ -702,14 +693,11 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
   }
 
   private def computePlan(): (Array[ChunkGroupPartition], Long, Long) = {
-    // ONE manifestOpt snapshot spans the whole planning pass — anchor
-    // admission, the plan collect, AND the duplicate-sibling victims
-    // guard below (a second snapshot could judge the guard against a
-    // committed set the plan never saw)
-    val spark = SparkSession.active
-    val io = new ParquetTableIO(root)
-    val mdf = manifestDf(spark, io)
-    val res = computePlanInner(spark, io, mdf)
+    // the scan-wide view spans the whole planning pass — anchor
+    // admission, the plan, AND the duplicate-sibling victims guard below
+    // (a second view could judge the guard against a committed set the
+    // plan never saw)
+    val res = computePlanInner()
     // record the planned victims for the row-level write's commit: every
     // (chunk_id, column) manifest row of every planned instance. Distinct
     // collapses duplicate-id instances across batches — ONE batch-gated
@@ -731,24 +719,14 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
       // sibling and drop the other — committing would delete the
       // never-read sibling. Skipped when nothing pruned (no pushed
       // filters, no runtime ids ⇒ every live instance is planned by
-      // construction — the unfiltered MERGE pre-pass pays nothing);
-      // otherwise a distributed live-vs-planned join that collects at
-      // most the one violating row.
+      // construction — the unfiltered MERGE pre-pass pays nothing).
       if (victims.nonEmpty && (filters.nonEmpty || runtimeChunkIds.isDefined)) {
         val plannedPerId: Map[Long, Int] = res._1.iterator.flatMap(_.chunkIds.iterator)
           .toArray.groupBy(identity).view.mapValues(_.length).toMap
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val plannedDf = plannedPerId.toSeq.toDF("chunk_id", "planned")
-        val bad = FsstScan.liveInstanceCounts(mdf,
-            Some(plannedPerId.keys.toSeq))
-          .join(plannedDf, "chunk_id")
-          .filter(col("live") > col("planned"))
-          .limit(1).collect()
-        bad.headOption.foreach { r =>
+        view.overPlanned(plannedPerId).foreach { case (id, live) =>
           throw new IllegalStateException(
-            s"row-level $table rewrite: chunk ${r.getLong(0)} has ${r.getLong(1)} live " +
-              s"instances but pruning planned only ${r.getInt(2)} — the id-granular " +
+            s"row-level $table rewrite: chunk $id has $live live " +
+              s"instances but pruning planned only ${plannedPerId(id)} — the id-granular " +
               "tombstone would delete the unplanned sibling(s) without rewriting them " +
               "(duplicate chunk ids with diverging content across batches); compact the " +
               "table first")
@@ -759,8 +737,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     res
   }
 
-  private def computePlanInner(spark: SparkSession, io: ParquetTableIO,
-      mdf: org.apache.spark.sql.DataFrame): (Array[ChunkGroupPartition], Long, Long) = {
+  private def computePlanInner(): (Array[ChunkGroupPartition], Long, Long) = {
     // an EMPTY runtime id set means the probe matched no groups at all —
     // nothing to read, nothing to rewrite
     if (runtimeChunkIds.exists(_.isEmpty)) return (Array.empty, 0L, 0L)
@@ -781,48 +758,38 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
       tableSchema.fields.exists(f => f.name == c &&
         (f.dataType == LongType || f.dataType == DoubleType))).toSet
     val doubleCols = tableSchema.fields.filter(_.dataType == DoubleType).map(_.name).toSet
-    // the runtime id set is EXACT on chunk_id: push it into the manifest
-    // parquet scan when small (the common selective-DML case); a huge set
-    // (barely-selective probe) stays driver-side — the collected rows are
-    // filtered by set membership below, so victims are exact either way
-    // and a giant In expression never reaches the parquet reader
-    // `mdf` is the plan-wide manifestOpt snapshot (see computePlan):
-    // anchor admission and the plan collect see the same committed set
-    val m = runtimeChunkIds.filter(_.size <= FsstScan.RuntimeIdPushdownLimit)
-      .fold(mdf)(ids =>
-        mdf.filter(org.apache.spark.sql.functions.col("chunk_id").isInCollection(ids)))
+    // the runtime id set is EXACT on chunk_id; it narrows only the rows
+    // planned from (the distributed view pushes only small sets into the
+    // manifest scan), and every collected row is re-checked below, so
+    // victims are exact either way. Anchor admission, the smallest-column
+    // choice and the live-declared-rows guard see the whole view, so both
+    // views decide them on the same rows whatever the id count.
+    def inRuntime(e: ManifestEntry) = runtimeChunkIds.forall(_.contains(e.chunkId))
     // a counting/anchor column must be live in EVERY live chunk
     // instance — instance-exact, not watermark arithmetic (per-column
     // rewrites break the proxy; see [[FsstScan.everyInstanceCols]]).
-    // lazy: a plain value projection never runs the coverage aggregate
-    lazy val anchorCols = anchorColsOn(mdf)
+    // lazy: a plain value projection never runs the coverage check
+    lazy val anchors = anchorCols
     if (valueFields.isEmpty && statCols.isEmpty && !stored.fieldNames.contains("key") &&
-        anchorCols.nonEmpty) {
+        anchors.nonEmpty) {
       // empty projection, no value filters: count rows straight off the
       // manifest (any single column counts each chunk's rows exactly once);
-      // the key predicate is pushed into the manifest parquet scan, the
-      // driver-side keySurvives is the idempotent residual
-      val anchor = anchorCols.head
-      val rows = m
-        .filter(org.apache.spark.sql.functions.col("column") === anchor)
-        .filter(FsstScan.keyPruneCond(filters))
-        .select("chunk_id", "n_rows", "min_key", "max_key")
-        .collect()
-        .filter(r => FsstScan.keySurvives(r.getString(2), r.getString(3), filters))
-        .filter(r => runtimeChunkIds.forall(_.contains(r.getLong(0))))
+      // keySurvives is the exact key test (the distributed view also
+      // pushes it into the manifest parquet scan)
+      val rows = view.rows(Seq(anchors.head), runtimeChunkIds, filters, Set.empty, doubleCols)
+        .filter(e => FsstScan.keySurvives(e.minKey, e.maxKey, filters) && inRuntime(e))
+        .sortBy(e => (e.chunkId, e.nRows))
       val parts = rows.grouped(chunksPerPartition).map { g =>
-        ChunkGroupPartition(g.map(_.getLong(0)), g.map(_.getLong(1)), Array.empty)
+        ChunkGroupPartition(g.map(_.chunkId), g.map(_.nRows), Array.empty)
       }.toArray
-      (parts, rows.map(_.getLong(1)).sum, 0L)
+      (parts, rows.map(_.nRows).sum, 0L)
     } else {
       // key-only scans anchor on the globally smallest every-batch
-      // column (by manifest bytes) — resolved with a distributed
-      // aggregate, not by collecting the manifest to look. A projection
-      // of ONLY evolved columns rides a base column so pre-evolution
-      // chunks still surface (null-padded).
+      // column (by manifest bytes). A projection of ONLY evolved columns
+      // rides a base column so pre-evolution chunks still surface
+      // (null-padded).
       val evolved = columnSince.keySet
-      lazy val baseAnchor: Option[String] = FsstScan.smallestColumn(
-        m.filter(org.apache.spark.sql.functions.col("column").isin(anchorCols: _*)))
+      lazy val baseAnchor: Option[String] = view.smallestColumn(anchors)
       val (fetch, readValues) =
         if (valueFields.nonEmpty)
           (if (valueFields.forall(evolved.contains)) valueFields ++ baseAnchor.toSeq
@@ -837,8 +804,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
       // correct.
       def liveDeclaredRows: Boolean = {
         val declared = tableSchema.fieldNames.drop(1).toSeq
-        declared.nonEmpty && !m.filter(
-          org.apache.spark.sql.functions.col("column").isin(declared: _*)).limit(1).isEmpty
+        declared.nonEmpty && view.hasRows(declared)
       }
       if ((fetch.isEmpty || (valueFields.nonEmpty && valueFields.forall(evolved.contains) &&
           baseAnchor.isEmpty)) && liveDeclaredRows)
@@ -848,11 +814,8 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
             "all-evolved projection; rewrite the table onto one schema generation " +
             "(full-table UPDATE or INSERT OVERWRITE)")
       val needed = (fetch ++ statCols).distinct
-      val mAll = FsstScan.pruneManifest(m, needed, filters, statCols, doubleCols)
-        .select("file", "column", "chunk_id", "n_rows", "bytes_out",
-          "min_key", "max_key", "value_min", "value_max")
-        .collect()
-        .filter(r => runtimeChunkIds.forall(_.contains(r.getLong(2))))
+      val mAll = view.rows(needed, runtimeChunkIds, filters, statCols, doubleCols)
+        .filter(inRuntime)
       FsstScan.planFromManifest(mAll, stored, tableSchema, filters,
         chunksPerPartition, table, Some((fetch, readValues)), columnSince)
     }
@@ -967,9 +930,7 @@ final class FsstMicroBatchStream(root: String, table: String, tableSchema: Struc
     val batches = io.committedBatchIds(spark, table).filter(b => b > s0 && b <= e0).sorted
     if (batches.isEmpty) return Array.empty
     val mAll = io.manifestForBatches(spark, table, batches.toIndexedSeq)
-      .select("file", "column", "chunk_id", "n_rows", "bytes_out",
-        "min_key", "max_key", "value_min", "value_max")
-      .collect()
+      .collect().map(ManifestEntry.fromRow)
     FsstScan.planFromManifest(mAll, required, tableSchema, filters, chunksPerPartition, table,
       None, columnSince)
       ._1.asInstanceOf[Array[InputPartition]]
@@ -980,6 +941,131 @@ final class FsstMicroBatchStream(root: String, table: String, tableSchema: Struc
     // same eq-pushdown + columnar policy as the batch scan
     new FsstReaderFactory(required, conf, FsstScan.byteEqFilters(filters, tableSchema),
       columnarMode)
+  }
+}
+
+/** The manifest facts one scan plans from, under ONE committed set.
+  * [[ManifestView.Driver]] answers from the driver-side snapshot rows
+  * ([[ParquetTableIO.manifestRows]]) with no Spark job;
+  * [[ManifestView.Distributed]] runs pushed-down jobs over the manifest
+  * DataFrame for manifests above the collect limit. Either way
+  * [[FsstScan.planFromManifest]] does the grouping and the exact
+  * key/zone tests.
+  */
+private[sources] sealed trait ManifestView {
+  /** [[FsstScan.everyInstanceCols]] over this view. */
+  def everyInstanceCols(candidates: Seq[String], universe: Seq[String]): Seq[String]
+  /** The smallest of `among` by manifest bytes ([[FsstScan.smallestColumn]]). */
+  def smallestColumn(among: Seq[String]): Option[String]
+  def hasRows(columns: Seq[String]): Boolean
+  /** Rows of `columns` (and of the chunk ids `ids`, when given) that may
+    * survive `filters` — a superset of the exact
+    * planFromManifest/keySurvives result; the distributed view narrows
+    * only id sets small enough to push, so callers re-check the ids.
+    */
+  def rows(columns: Seq[String], ids: Option[Set[Long]], filters: Array[Filter],
+      statCols: Set[String], doubleCols: Set[String]): Array[ManifestEntry]
+  /** A chunk id (with its live instance count) that has more live
+    * instances than `planned` gives it.
+    */
+  def overPlanned(planned: Map[Long, Int]): Option[(Long, Long)]
+  /** No chunk of `cols` lacks zone stats. */
+  def statsComplete(cols: Seq[String]): Boolean
+  /** The pushed aggregates, before the double decode: COUNT(*) as Long,
+    * key bounds as String, zone bounds as Long; null when nothing to fold.
+    */
+  def fold(specs: Array[AggSpec], anchor: String): Array[Any]
+}
+
+private[sources] object ManifestView {
+  /** The driver snapshot when the manifest is small enough, else the
+    * distributed view — both honor the `asOf` pin.
+    */
+  def apply(root: String, table: String, asOf: Option[String]): ManifestView = {
+    val spark = SparkSession.active
+    val io = new ParquetTableIO(root)
+    io.manifestRows(spark, table, asOf) match {
+      case Some(s) => Driver(s.live)
+      case None => Distributed(io.manifestOpt(spark, table, asOf))
+    }
+  }
+
+  final case class Driver(m: Array[ManifestEntry]) extends ManifestView {
+    def everyInstanceCols(candidates: Seq[String], universe: Seq[String]): Seq[String] =
+      FsstScan.everyInstanceCols(m, candidates, universe)
+    def smallestColumn(among: Seq[String]): Option[String] =
+      FsstScan.smallestColumn(m.filter(e => among.contains(e.column)))
+    def hasRows(columns: Seq[String]): Boolean = m.exists(e => columns.contains(e.column))
+    def rows(columns: Seq[String], ids: Option[Set[Long]], filters: Array[Filter],
+        statCols: Set[String], doubleCols: Set[String]): Array[ManifestEntry] = {
+      val keep = columns.toSet
+      m.filter(e => keep(e.column) && ids.forall(_.contains(e.chunkId)))
+    }
+    def overPlanned(planned: Map[Long, Int]): Option[(Long, Long)] =
+      m.iterator.filter(e => planned.contains(e.chunkId)).toSeq
+        .groupMapReduce(e => (e.chunkId, e.column))(_ => 1L)(_ + _)
+        .groupMapReduce(_._1._1)(_._2)(math.max)
+        .find { case (id, live) => live > planned(id) }
+    def statsComplete(cols: Seq[String]): Boolean =
+      !m.exists(e => cols.contains(e.column) && e.valueMin.isEmpty)
+    def fold(specs: Array[AggSpec], anchor: String): Array[Any] = {
+      def of(c: String) = m.iterator.filter(_.column == c)
+      def pick(isMin: Boolean)(a: String, b: String) =
+        if ((Keys.compareUtf8(a, b) <= 0) == isMin) a else b
+      specs.map {
+        case CountStarSpec => java.lang.Long.valueOf(of(anchor).map(_.nRows).sum)
+        case MinMaxSpec("key", isMin, _) =>
+          of(anchor).map(e => if (isMin) e.minKey else e.maxKey).filter(_ != null)
+            .reduceOption(pick(isMin)).orNull
+        case MinMaxSpec(c, isMin, _) =>
+          of(c).flatMap(e => if (isMin) e.valueMin else e.valueMax)
+            .reduceOption((a, b) => if (isMin) math.min(a, b) else math.max(a, b))
+            .map(java.lang.Long.valueOf).orNull
+      }
+    }
+  }
+
+  final case class Distributed(m: org.apache.spark.sql.DataFrame) extends ManifestView {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, sum, when}
+    def everyInstanceCols(candidates: Seq[String], universe: Seq[String]): Seq[String] =
+      FsstScan.everyInstanceCols(m, candidates, universe)
+    def smallestColumn(among: Seq[String]): Option[String] =
+      FsstScan.smallestColumn(m.filter(col("column").isin(among: _*)))
+    def hasRows(columns: Seq[String]): Boolean =
+      !m.filter(col("column").isin(columns: _*)).limit(1).isEmpty
+    def rows(columns: Seq[String], ids: Option[Set[Long]], filters: Array[Filter],
+        statCols: Set[String], doubleCols: Set[String]): Array[ManifestEntry] = {
+      val narrowed = ids.filter(_.size <= FsstScan.RuntimeIdPushdownLimit)
+        .fold(m)(s => m.filter(col("chunk_id").isInCollection(s)))
+      FsstScan.pruneManifest(narrowed, columns, filters, statCols, doubleCols)
+        .collect().map(ManifestEntry.fromRow)
+    }
+    // a distributed live-vs-planned join that collects at most the one
+    // violating row
+    def overPlanned(planned: Map[Long, Int]): Option[(Long, Long)] = {
+      val spark = m.sparkSession
+      import spark.implicits._
+      FsstScan.liveInstanceCounts(m, Some(planned.keys.toSeq))
+        .join(planned.toSeq.toDF("chunk_id", "planned"), "chunk_id")
+        .filter(col("live") > col("planned"))
+        .limit(1).collect().headOption.map(r => (r.getLong(0), r.getLong(1)))
+    }
+    def statsComplete(cols: Seq[String]): Boolean =
+      m.filter(col("column").isin(cols: _*)).filter(col("value_min").isNull).isEmpty
+    def fold(specs: Array[AggSpec], anchor: String): Array[Any] = {
+      val aggExprs = specs.zipWithIndex.map {
+        case (CountStarSpec, i) =>
+          coalesce(sum(when(col("column") === anchor, col("n_rows"))), lit(0L)).as(s"a$i")
+        case (MinMaxSpec("key", isMin, _), i) =>
+          (if (isMin) min(when(col("column") === anchor, col("min_key")))
+           else max(when(col("column") === anchor, col("max_key")))).as(s"a$i")
+        case (MinMaxSpec(c, isMin, _), i) =>
+          (if (isMin) min(when(col("column") === c, col("value_min")))
+           else max(when(col("column") === c, col("value_max")))).as(s"a$i")
+      }
+      val row = m.agg(aggExprs.head, aggExprs.tail.toIndexedSeq: _*).head()
+      specs.indices.map(i => if (row.isNullAt(i)) null else row.get(i)).toArray
+    }
   }
 }
 
@@ -1073,6 +1159,21 @@ private[sources] object FsstScan {
     }
   }
 
+  /** [[everyInstanceCols]] over driver-side manifest rows — the same
+    * counts, with instances keyed by [[batchFromPath]].
+    */
+  def everyInstanceCols(m: Array[ManifestEntry],
+      candidates: Seq[String], universe: Seq[String]): Seq[String] = {
+    if (candidates.isEmpty || universe.isEmpty) return Seq.empty
+    if (candidates.sizeIs == 1 && universe == candidates) return candidates
+    val u = universe.toSet
+    val perCol = m.iterator.filter(e => u(e.column))
+      .map(e => (e.column, (e.chunkId, batchFromPath(e.file)))).toSeq
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val total = perCol.valuesIterator.flatten.toSet.size
+    candidates.filter(c => perCol.get(c).fold(0)(_.size) == total)
+  }
+
   /** `required` minus the metadata columns — the STORED fields a plan
     * fetches from disk (metadata values are emitted by the reader from
     * the partition's own chunk list, never read).
@@ -1125,7 +1226,7 @@ private[sources] object FsstScan {
     * repeated single-column `encodeBytesLocal` + `writeChunks`) are
     * served by the typed per-column read path, not the connector.
     */
-  def planFromManifest(mAll: Array[org.apache.spark.sql.Row], required: StructType,
+  def planFromManifest(mAll: Array[ManifestEntry], required: StructType,
       tableSchema: StructType, filters: Array[Filter], chunksPerPartition: Int,
       table: String, fetchOverride: Option[(Seq[String], Boolean)] = None,
       columnSince: Map[String, String] = Map.empty): (Array[ChunkGroupPartition], Long, Long) = {
@@ -1138,25 +1239,19 @@ private[sources] object FsstScan {
         (f.dataType == LongType || f.dataType == DoubleType))).toSet
     if (mAll.isEmpty) return (Array.empty, 0L, 0L)
     val evolved = columnSince.keySet
-    val declaredSet = tableSchema.fieldNames.drop(1).toSet
+    val declared = tableSchema.fieldNames.drop(1).toSeq
+    val declaredSet = declared.toSet
+    def instanceOf(e: ManifestEntry) = (e.chunkId, batchFromPath(e.file))
     val (fetch, readValues) = fetchOverride.getOrElse {
+      // the anchor must be live in EVERY instance in view that holds
+      // declared rows — instance-exact over the collected rows (this
+      // path's mAll is the full micro-batch view), so residue rows of
+      // undeclared dropped columns neither anchor nor veto, and a
+      // column physically absent from a per-column-rewrite batch is
+      // never admitted by watermark arithmetic
       def anchor: Option[String] = {
-        // the anchor must be live in EVERY instance in view that holds
-        // declared rows — instance-exact over the collected rows (this
-        // path's mAll is the full micro-batch view), so residue rows of
-        // undeclared dropped columns neither anchor nor veto, and a
-        // column physically absent from a per-column-rewrite batch is
-        // never admitted by watermark arithmetic
-        val byInst = mAll.filter(r => declaredSet.contains(r.getString(1)))
-          .groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
-        val ok =
-          if (byInst.isEmpty) Set.empty[String]
-          else byInst.valuesIterator
-            .map(_.iterator.map(_.getString(1)).toSet).reduce(_ intersect _)
-        val rows = mAll.filter(r => ok.contains(r.getString(1)))
-        if (rows.isEmpty) None
-        else Some(rows.groupBy(_.getString(1)).view
-          .mapValues(_.map(_.getLong(4)).sum).minBy(t => (t._2, t._1))._1)
+        val ok = everyInstanceCols(mAll, declared, declared).toSet
+        smallestColumn(mAll.filter(e => ok(e.column)))
       }
       if (valueFields.nonEmpty)
         (if (valueFields.forall(evolved.contains)) valueFields ++ anchor.toSeq
@@ -1172,38 +1267,30 @@ private[sources] object FsstScan {
     // instances of undeclared columns are legitimately invisible.
     val fetchSet = fetch.toSet
     def lostInstance: Boolean = fetchOverride.isEmpty &&
-      mAll.filter(r => declaredSet.contains(r.getString(1)))
-        .groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
-        .exists { case (_, rows) => !rows.exists(r => fetchSet.contains(r.getString(1))) }
-    if ((fetch.isEmpty && mAll.exists(r => declaredSet.contains(r.getString(1)))) ||
-        lostInstance)
+      mAll.filter(e => declaredSet.contains(e.column)).groupBy(instanceOf)
+        .exists { case (_, rows) => !rows.exists(e => fetchSet.contains(e.column)) }
+    if ((fetch.isEmpty && mAll.exists(e => declaredSet.contains(e.column))) || lostInstance)
       throw new IllegalStateException(
         s"table '$table': no fetchable column is live in every chunk instance " +
           "in view — cannot anchor this scan; rewrite the table onto one schema " +
           "generation (full-table UPDATE or INSERT OVERWRITE)")
     if (fetch.isEmpty) return (Array.empty, 0L, 0L)
     val needed = (fetch ++ statCols).distinct.toSet
-    val m = mAll.filter(r => needed.contains(r.getString(1)))
     // (chunk_id, batch) -> per-column manifest rows: one PHYSICAL chunk.
     // Grouping by id alone would merge chunks whose id repeats across
     // append batches (hash-mode ids are bucket indexes in every batch)
     // and silently drop all but one file's rows.
-    val byInstance = m.groupBy(r => (r.getLong(2), batchFromPath(r.getString(0))))
+    val byInstance = mAll.filter(e => needed.contains(e.column)).groupBy(instanceOf)
     val survivors = byInstance.filter { case (_, rows) =>
-      val r0 = rows(0)
-      keySurvives(r0.getString(5), r0.getString(6), filters) &&
-        rows.forall { r =>
-          val colName = r.getString(1)
-          val lo = if (r.isNullAt(7)) None else Some(r.getLong(7))
-          val hi = if (r.isNullAt(8)) None else Some(r.getLong(8))
-          valueSurvives(colName, lo, hi, doubleCols.contains(colName), filters)
-        }
+      keySurvives(rows(0).minKey, rows(0).maxKey, filters) &&
+        rows.forall(e => valueSurvives(e.column, e.valueMin, e.valueMax,
+          doubleCols.contains(e.column), filters))
     }
     val groups = mutable.LinkedHashMap.empty[Seq[String], mutable.ArrayBuffer[(Long, Long)]]
     var totalRows = 0L
     var totalBytes = 0L
     survivors.toArray.sortBy(_._1).foreach { case ((cid, batch), rows) =>
-      val perCol = rows.groupBy(_.getString(1))
+      val perCol = rows.groupBy(_.column)
       fetch.foreach { c =>
         val n = perCol.get(c).map(_.length).getOrElse(0)
         // a column added by schema evolution is legitimately absent from
@@ -1217,11 +1304,10 @@ private[sources] object FsstScan {
           "columns via the typed API, or rewrite the table onto one schema " +
           "generation (full-table UPDATE or INSERT OVERWRITE)")
       }
-      val fileOf = perCol.view.mapValues(_.head.getString(0)).toMap
-      val tuple = fetch.map(c => fileOf.getOrElse(c, ""))
-      groups.getOrElseUpdate(tuple, mutable.ArrayBuffer.empty) += ((cid, rows(0).getLong(3)))
-      totalRows += rows(0).getLong(3)
-      totalBytes += rows.filter(r => fetch.contains(r.getString(1))).map(_.getLong(4)).sum
+      val tuple = fetch.map(c => perCol.get(c).fold("")(_.head.file))
+      groups.getOrElseUpdate(tuple, mutable.ArrayBuffer.empty) += ((cid, rows(0).nRows))
+      totalRows += rows(0).nRows
+      totalBytes += rows.iterator.filter(e => fetchSet.contains(e.column)).map(_.bytesOut).sum
     }
     val parts = groups.iterator.flatMap { case (files, chunks) =>
       chunks.grouped(chunksPerPartition).map { g =>
@@ -1319,6 +1405,11 @@ private[sources] object FsstScan {
       .orderBy(col("b"), col("column")).limit(1)
       .collect().headOption.map(_.getString(0))
   }
+
+  /** [[smallestColumn]] over driver-side manifest rows. */
+  def smallestColumn(m: Array[ManifestEntry]): Option[String] =
+    if (m.isEmpty) None
+    else Some(m.groupMapReduce(_.column)(_.bytesOut)(_ + _).minBy(t => (t._2, t._1))._1)
 
   /** Push the column projection, key predicates, and zone predicates
     * into the manifest DataFrame. A chunk instance whose ANY fetched/

@@ -168,8 +168,12 @@ object Bench {
     val decGbps = bytesIn / 1e9 / results("pages_decode")
     val ratio = bytesOut.toDouble / bytesIn
 
-    def repArr(ts: Seq[Double]): String = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    // Locale.ROOT: a comma-decimal default locale would print "0,301"
+    // and break the JSON line
+    def num(digits: Int, v: Double): String =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    def repArr(ts: Seq[Double]): String = ts.map(num(3, _)).mkString("[", ",", "]")
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(3, v) }.mkString("{", ",", "}")
     // fixture-construction seconds for the catalog/DSv2 queries whose
     // timed body BUILDS its table before reading it (recorded inside
     // Queries): read-path seconds = queries[k] - fixture_sec[k], so a
@@ -178,15 +182,16 @@ object Bench {
       import scala.jdk.CollectionConverters._
       fsstspark.queries.Queries.fixtureSeconds.asScala.toSeq.sortBy(_._1)
         .filter { case (k, _) => results.contains(k) }
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+        .map { case (k, v) => "\"" + k + "\":" + num(3, v) }.mkString("{", ",", "}")
     }
-    val total = f"${results.values.filter(_ > 0).sum}%.3f"
+    val total = num(3, results.values.filter(_ > 0).sum)
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""fixture_sec":$fixtures,""" +
         s""""cpus":$cpus,"pages":$nPages,"pages_bytes_in":$bytesIn,"pages_bytes_out":$bytesOut,""" +
-        f""""pages_ratio":$ratio%.4f,"encode_gbps":$encGbps%.3f,"encode_shuffle_gbps":$encShuffleGbps%.3f,"decode_gbps":$decGbps%.3f,""" +
-        f""""host_kernel_enc_mbps":$hostEncMbps%.1f,"host_kernel_dec_mbps":$hostDecMbps%.1f,""" +
+        s""""pages_ratio":${num(4, ratio)},"encode_gbps":${num(3, encGbps)},""" +
+        s""""encode_shuffle_gbps":${num(3, encShuffleGbps)},"decode_gbps":${num(3, decGbps)},""" +
+        s""""host_kernel_enc_mbps":${num(1, hostEncMbps)},"host_kernel_dec_mbps":${num(1, hostDecMbps)},""" +
         s""""headline_reps":{"local_sec":${repArr(localReps)},"shuffle_sec":${repArr(shuffleReps)},"decode_sec":${repArr(decodeReps)}}}""")
     spark.stop()
   }

@@ -1283,4 +1283,298 @@ class DataSourceSpec extends AnyFunSuite {
     assert(FsstCatalog.readColumnSince(spark, root, "t").isEmpty)
     assert(!Files.exists(since))
   }
+
+  // ------------------------------------------- driver manifest snapshot
+
+  /** `body` with table `pages` under `root` past the driver's batch limit:
+    * data-less commit markers, with ids sorting before every real batch so
+    * that no `VERSION AS OF` pin moves, send every plan through the
+    * distributed manifest jobs.
+    */
+  private def aboveLimit[T](root: String)(body: => T): T = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pads = (0 to ParquetTableIO.DriverManifestMaxBatches).map(i =>
+      new Path(f"$root/pages/commits/b0000000000000-pad$i%05d"))
+    pads.foreach(fs.create(_, true).close())
+    try body
+    finally pads.foreach(fs.delete(_, false))
+  }
+
+  /** Spark jobs `body` starts from this thread. A listener counts job
+    * starts carrying a local-property tag; a sentinel job run after
+    * `body` shows that the asynchronous listener bus has delivered every
+    * earlier job start.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val tag = "fsst.test.job"
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      def tagged(t: String)(f: => Unit): Unit = {
+        sc.setLocalProperty(tag, t)
+        try f finally sc.setLocalProperty(tag, null)
+      }
+      tagged(id)(body)
+      tagged(id + "-end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(id + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(id + "-end"), "listener bus never delivered the sentinel job")
+      seen.asScala.count(_ == id)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def catalogOn(root: String, prefix: String): String = {
+    val cat = s"${prefix}_${math.abs(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "fsstspark.sources.FsstCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.conf.set(s"spark.sql.catalog.$cat.stringColumns.pages", "text")
+    cat
+  }
+
+  /** Three committed batches of the pages fixture (split by doc id), each
+    * sorted by url, then one whole chunk tombstoned.
+    */
+  private def threeBatchesAndATombstone(root: String): (ParquetTableIO, DataFrame) = {
+    val io = new ParquetTableIO(root)
+    val df = pagesDf
+    (0 until 3).foreach { i =>
+      io.writeChunks(EncodePipeline.encodeColumnsLocal(
+        df.filter((col("ts") / 1000) % 3 === i).orderBy("url").coalesce(1),
+        col("url"), pageSpecs, 8L << 10), "pages")
+    }
+    val victim = io.manifest(spark, "pages").select("chunk_id").distinct()
+      .orderBy("chunk_id").limit(1)
+    io.removeChunks(spark, "pages",
+      io.manifest(spark, "pages").join(victim, Seq("chunk_id"), "left_semi")
+        .select("chunk_id", "column"))
+    val live = spark.read.format("fsst").option("root", root).option("table", "pages")
+      .option("stringColumns", "text").load()
+    (io, live)
+  }
+
+  test("a SQL point read of a small table runs exactly one Spark job") {
+    val root = freshRoot()
+    val (io, live) = threeBatchesAndATombstone(root)
+    assert(io.committedBatchIds(spark, "pages").length >= 4, "3 appends + 1 delete batch")
+    assert(io.manifestRows(spark, "pages", None).isDefined, "fixture must fit the snapshot")
+    val cat = catalogOn(root, "fsst_jobs")
+    val keys = live.select("key").orderBy("key").collect().map(_.getString(0))
+    val key = keys(keys.length / 2)
+    val query = s"SELECT key, ts, text FROM $cat.pages WHERE key = '$key'"
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf { rows = spark.sql(query).collect() }
+    assert(jobs == 1, s"point read ran $jobs Spark jobs; planning must run none")
+    assert(rows.length == 1 && rows(0).getString(0) == key)
+    // above the limit the same read plans through manifest jobs
+    val jobsAbove = aboveLimit(root)(jobsOf(spark.sql(query).collect()))
+    assert(jobsAbove > 1, s"the above-limit path ran only $jobsAbove jobs")
+  }
+
+  test("the driver snapshot sees a swapped table directory, a vacuum, a repair and an in-place rewrite") {
+    import org.apache.hadoop.fs.Path
+    val root = freshRoot()
+    val cat = catalogOn(root, "fsst_fresh")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def count(): Long = spark.sql(s"SELECT count(*) FROM $cat.pages").collect()(0).getLong(0)
+    def sumTs(): Long = spark.sql(s"SELECT sum(ts) FROM $cat.pages").collect()(0).getLong(0)
+    val df = pagesDf
+    val (a, b) = (df.filter((col("ts") / 1000) % 2 === 0), df.filter((col("ts") / 1000) % 2 =!= 0))
+    val (nA, nB) = (a.count(), b.count())
+    val io = new ParquetTableIO(root)
+    // 1. table directory swapped on disk: A moves aside, B is written in
+    // its place, then A is swapped back
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(a, col("url"), pageSpecs, 8L << 10), "pages")
+    assert(count() == nA)
+    assert(fs.rename(new Path(s"$root/pages"), new Path(s"$root/pages_a")))
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(b, col("url"), pageSpecs, 8L << 10), "pages")
+    assert(count() == nB, "read after the directory swap must see the new table")
+    assert(fs.delete(new Path(s"$root/pages"), true))
+    assert(fs.rename(new Path(s"$root/pages_a"), new Path(s"$root/pages")))
+    assert(count() == nA, "read after swapping back must see the old table again")
+    // 2. vacuum: B appended, then A's rows deleted row-level (a value
+    // predicate) so A's files die whole; vacuum deletes them and
+    // rewrites the manifest
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(b, col("url"), pageSpecs, 8L << 10), "pages")
+    assert(count() == nA + nB)
+    spark.sql(s"DELETE FROM $cat.pages WHERE ts % 2000 = 0")
+    assert(count() == nB)
+    assert(io.vacuum(spark, "pages") > 0, "vacuum reclaimed nothing")
+    assert(count() == nB && sumTs() == b.agg(sum("ts")).collect()(0).getLong(0),
+      "read after vacuum must not plan reclaimed files")
+    // 3. repair: a manifest partition lost on disk hides its batch; the
+    // rebuilt manifest shows it again
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(a, col("url"), pageSpecs, 8L << 10), "pages")
+    val last = io.committedBatchIds(spark, "pages").max
+    assert(count() == nA + nB)
+    assert(fs.delete(new Path(s"$root/pages/manifest/batch=$last"), true))
+    assert(count() == nB, "a missing manifest partition hides its batch")
+    io.repairManifest(spark, "pages")
+    assert(count() == nA + nB, "read after repairManifest must see the rebuilt manifest")
+    // 4. a manifest file rewritten in place under the same path (here cut
+    // to one row): the snapshot must not trust the cached decode
+    val before = io.manifest(spark, "pages").count()
+    val mf = fs.listStatus(new Path(s"$root/pages/manifest/batch=$last")).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).head
+    val tmp = s"$root/manifest_cut"
+    spark.read.parquet(mf.toString).limit(1).coalesce(1).write.parquet(tmp)
+    val cut = fs.listStatus(new Path(tmp)).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    assert(fs.delete(mf, false) && fs.rename(cut, mf))
+    val after = io.manifest(spark, "pages").count()
+    assert(after < before)
+    val snapshotRows = io.manifestRows(spark, "pages", None).get.live.length
+    assert(snapshotRows == after, "the snapshot served the cached decode of a rewritten file")
+    assert(count() == aboveLimit(root)(count()))
+  }
+
+  test("VERSION AS OF an older batch reads that snapshot after further commits") {
+    val root = freshRoot()
+    val (io, live) = threeBatchesAndATombstone(root)
+    val cat = catalogOn(root, "fsst_pin")
+    val batches = io.committedBatchIds(spark, "pages").sorted
+    def countAt(b: String): Long =
+      spark.sql(s"SELECT count(*) FROM $cat.pages VERSION AS OF '$b'").collect()(0).getLong(0)
+    def keysAt(b: String): Set[String] =
+      spark.sql(s"SELECT key FROM $cat.pages VERSION AS OF '$b' WHERE ts >= 0")
+        .collect().map(_.getString(0)).toSet
+    val first = batches.head
+    val (n1, k1) = (countAt(first), keysAt(first))
+    // more commits: an append and a row-level delete
+    val extra = pagesDf.orderBy("url").limit(9).select(concat(col("url"), lit("#2")).as("url"),
+      col("text"), col("html"), col("ts"), col("score"))
+    val cut = 20000L
+    val want = live.filter(col("ts") >= cut).count() + extra.filter(col("ts") >= cut).count()
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(extra, col("url"), pageSpecs, 8L << 10),
+      "pages")
+    spark.sql(s"DELETE FROM $cat.pages WHERE ts < $cut")
+    assert(countAt(first) == n1 && keysAt(first) == k1, "the pinned snapshot moved")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.pages").collect()(0).getLong(0) == want)
+    // each pin equals the distributed manifest at that pin
+    io.committedBatchIds(spark, "pages").foreach { b =>
+      val snapshotRows = io.manifestRows(spark, "pages", Some(b)).get.live.length
+      assert(snapshotRows == io.manifestAsOf(spark, "pages", b).count(), s"rows differ at $b")
+    }
+  }
+
+  test("the driver snapshot and the above-limit path plan identical partitions and aggregates") {
+    import org.apache.spark.sql.sources._
+    val root = freshRoot()
+    val (io, _) = threeBatchesAndATombstone(root)
+    val cat = catalogOn(root, "fsst_equiv")
+    val firstBatch = io.committedBatchIds(spark, "pages").min
+    // an evolved column, landed physically by one later insert
+    spark.sql(s"ALTER TABLE $cat.pages ADD COLUMN rank BIGINT")
+    pagesDf.limit(7).select(concat(col("url"), lit("#v2")).as("key"), col("text"), col("html"),
+      col("ts"), col("score"), (col("ts") * 2L).as("rank")).writeTo(s"$cat.pages").append()
+    assert(io.manifestRows(spark, "pages", None).isDefined)
+    assert(aboveLimit(root)(io.manifestRows(spark, "pages", None)).isEmpty)
+    def table(asOf: Option[String]): FsstTable = {
+      val opts = new java.util.HashMap[String, String]()
+      opts.put("root", root)
+      opts.put("table", "pages")
+      asOf.foreach(opts.put("asOf", _))
+      FsstDataSource.resolve(new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+    }
+    type Plan = (Seq[(Seq[Long], Seq[Long], Seq[ColFile], Boolean)], Long, Long)
+    def plan(asOf: Option[String], cols: Seq[String], filters: Array[Filter],
+        runtime: Array[Filter] = Array.empty): Plan = {
+      val tbl = table(asOf)
+      val sb = tbl.newScanBuilder(
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).asInstanceOf[FsstScanBuilder]
+      sb.pruneColumns(StructType(cols.map(c =>
+        tbl.schema().fields.find(_.name == c).getOrElse(StructField(c, LongType)))))
+      sb.pushFilters(filters)
+      val scan = sb.build().asInstanceOf[FsstScan]
+      if (runtime.nonEmpty) scan.filter(runtime)
+      val parts = scan.planInputPartitions().toSeq.map { case p: ChunkGroupPartition =>
+        (p.chunkIds.toSeq, p.nRows.toSeq, p.colFiles.toSeq, p.readValues)
+      }
+      val st = scan.estimateStatistics()
+      (parts, st.numRows().getAsLong, st.sizeInBytes().getAsLong)
+    }
+    val keys = spark.read.format("fsst").option("root", root).option("table", "pages").load()
+      .select("key").orderBy("key").collect().map(_.getString(0))
+    val (k1, k2, k3) = (keys(keys.length / 5), keys(keys.length / 2), keys(4 * keys.length / 5))
+    val prefix = k2.split("/doc/")(0)
+    val tsAll = pagesDf.agg(min("ts"), max("ts")).collect()(0)
+    val (lo, hi) = (tsAll.getLong(0), tsAll.getLong(1))
+    val mid = lo + (hi - lo) / 2
+    val chunkIds = io.manifest(spark, "pages").select("chunk_id").distinct().orderBy("chunk_id")
+      .collect().map(r => java.lang.Long.valueOf(r.getLong(0)))
+    val base = Seq("key", "ts", "text")
+    val cases: Seq[(String, () => Plan)] = Seq(
+      "no filter" -> (() => plan(None, base, Array.empty)),
+      "key eq" -> (() => plan(None, base, Array(EqualTo("key", k2)))),
+      "key range" -> (() => plan(None, base,
+        Array(GreaterThanOrEqual("key", k1), LessThan("key", k3)))),
+      "key prefix" -> (() => plan(None, Seq("key"), Array(StringStartsWith("key", prefix)))),
+      "key IN" -> (() => plan(None, base, Array(In("key", Array[Any](k1, k3))))),
+      "zone ranges" -> (() => plan(None, Seq("key", "score"), Array(
+        GreaterThanOrEqual("ts", mid), LessThanOrEqual("ts", mid + (hi - lo) / 10),
+        GreaterThan("score", 1.0)))),
+      "_chunk_id runtime ids" -> (() => plan(None, Seq("key", "text", FsstScan.ChunkIdCol),
+        Array.empty, Array(In(FsstScan.ChunkIdCol, chunkIds.take(3).toArray[Any])))),
+      // more ids than the distributed view pushes into the manifest scan:
+      // three live ids padded with ids no chunk has
+      "_chunk_id runtime ids above the pushdown limit" -> (() => plan(None,
+        Seq("key", FsstScan.ChunkIdCol), Array.empty, Array(In(FsstScan.ChunkIdCol,
+          (chunkIds.take(3) ++ (1 to FsstScan.RuntimeIdPushdownLimit).map(i =>
+            java.lang.Long.valueOf(1000000000L + i))).toArray[Any])))),
+      "empty projection" -> (() => plan(None, Seq.empty, Array(GreaterThan("key", k1)))),
+      "all-evolved projection" -> (() => plan(None, Seq("rank"), Array.empty)),
+      "asOf" -> (() => plan(Some(firstBatch), base, Array(LessThan("key", k3)))))
+    val driverPlans = cases.map { case (name, run) => name -> run() }
+    val distributedPlans = aboveLimit(root)(cases.map { case (name, run) => name -> run() })
+    driverPlans.zip(distributedPlans).foreach { case ((name, driver), (_, distributed)) =>
+      assert(driver == distributed, s"$name: driver snapshot and above-limit plans differ")
+      assert(driver._1.nonEmpty || name == "asOf", s"$name: fixture planned nothing")
+    }
+    // pushed aggregates, current and pinned
+    def aggs(asOf: Option[String]) = {
+      val r = spark.read.format("fsst").option("root", root).option("table", "pages")
+      val d = asOf.fold(r)(r.option("asOf", _)).load()
+        .agg(count(lit(1)), min("ts"), max("ts"), min("key"), max("key"),
+          min("score"), max("score"))
+      assert(d.queryExecution.executedPlan.toString.contains("PushedAggregates"))
+      d.collect()(0)
+    }
+    val pins = Seq(None, Some(firstBatch))
+    assert(pins.map(aggs) == aboveLimit(root)(pins.map(aggs)), "pushed aggregates differ")
+  }
+
+  test("a manifest past either driver limit plans through the distributed path") {
+    import org.apache.hadoop.fs.Path
+    val root = freshRoot()
+    val io = writeTable(pagesDf, root, "pages")
+    def read() = spark.read.format("fsst").option("root", root).option("table", "pages").load()
+    def count(): Long = read().count()
+    val n = count()
+    def keysNow = read().select("key").collect().map(_.getString(0)).toSet
+    val keys = keysNow
+    assert(io.manifestRows(spark, "pages", None).isDefined)
+    // batches: data-less commit markers past the batch limit
+    aboveLimit(root) {
+      assert(io.committedBatchIds(spark, "pages").length > ParquetTableIO.DriverManifestMaxBatches)
+      assert(io.manifestRows(spark, "pages", None).isEmpty)
+      assert(count() == n && keysNow == keys)
+    }
+    assert(io.manifestRows(spark, "pages", None).isDefined)
+    // bytes: an inert tombstone file (gated by a batch that never
+    // commits) past the byte limit
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.range(400000).select(col("id").as("chunk_id"), expr("uuid()").as("column"),
+        lit("b9999999999999-inert").as("gated_by"))
+      .coalesce(1).write.mode("append").parquet(s"$root/pages/tombstones")
+    assert(fs.getContentSummary(new Path(s"$root/pages/tombstones")).getLength >
+      ParquetTableIO.DriverManifestMaxBytes)
+    assert(io.manifestRows(spark, "pages", None).isEmpty)
+    assert(count() == n && keysNow == keys)
+  }
 }
