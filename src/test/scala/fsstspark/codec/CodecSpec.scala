@@ -1,6 +1,7 @@
 package fsstspark.codec
 
 import org.scalatest.funsuite.AnyFunSuite
+import fsstspark.codec.fsst.TestCorpora
 import fsstspark.util.{BitPacker, ByteArrayBuilder}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -14,6 +15,12 @@ class CodecSpec extends AnyFunSuite {
       else assert(java.util.Arrays.equals(back(i), values(i)), s"index $i mismatch")
     }
   }
+
+  /** The in-repo prose corpus, then the reference corpus `name` split on
+    * newlines wherever it is present.
+    */
+  private def proseCorpora(name: String): Seq[Array[String]] =
+    TestCorpora.prose +: TestCorpora.reference(name).map(_.split("\n")).toSeq
 
   private val textValues: Array[Array[Byte]] =
     (0 until 400).map(i => s"https://host-${i % 7}.example.com/path/$i?session=${i * 31}".getBytes(UTF_8)).toArray
@@ -45,13 +52,13 @@ class CodecSpec extends AnyFunSuite {
   }
 
   test("bytes selector: natural text picks fsst and compresses") {
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/testdata/art_of_war.txt")), UTF_8)
-      .split("\n").filter(_.nonEmpty).map(_.getBytes(UTF_8))
-    val e = BytesCodec.encodeAuto(lines)
-    assert(e.codec == BytesCodec.FSST, s"got ${BytesCodec.names(e.codec)}")
-    assert(e.blob.length < e.bytesIn, s"${e.blob.length} !< ${e.bytesIn}")
-    bytesRoundtrip(lines, _ => e.blob)
+    proseCorpora("art_of_war.txt").foreach { text =>
+      val lines = text.filter(_.nonEmpty).map(_.getBytes(UTF_8))
+      val e = BytesCodec.encodeAuto(lines)
+      assert(e.codec == BytesCodec.FSST, s"got ${BytesCodec.names(e.codec)}")
+      assert(e.blob.length < e.bytesIn, s"${e.blob.length} !< ${e.bytesIn}")
+      bytesRoundtrip(lines, _ => e.blob)
+    }
   }
 
   test("bytes selector: constant column picks rle") {
@@ -384,29 +391,29 @@ class CodecSpec extends AnyFunSuite {
   }
 
   test("selectEquals FSST: encoded-probe equality without decode on natural text") {
-    val lines = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/testdata/en_mobydick.txt")), UTF_8)
-      .split("\n").filter(_.nonEmpty).take(4000)
-    // plant duplicates of one probe line and interleave nulls
-    val probeStr = lines(137)
-    val values: Array[Array[Byte]] = (lines :+ probeStr :+ probeStr)
-      .zipWithIndex.map { case (s, i) =>
-        if (i % 97 == 43) null else s.getBytes(UTF_8)
+    proseCorpora("en_mobydick.txt").foreach { text =>
+      val lines = text.filter(_.nonEmpty).take(4000)
+      // plant duplicates of one probe line and interleave nulls
+      val probeStr = lines(137)
+      val values: Array[Array[Byte]] = (lines :+ probeStr :+ probeStr)
+        .zipWithIndex.map { case (s, i) =>
+          if (i % 97 == 43) null else s.getBytes(UTF_8)
+        }
+      val blob = BytesCodec.encodeFsst(values)
+      val target = probeStr.getBytes(UTF_8)
+      val (hits, read) = BytesCodec.selectEquals(blob, target)
+      // ground truth from a full decode
+      val expected = BytesCodec.decode(blob).zipWithIndex.collect {
+        case (v, i) if v != null && java.util.Arrays.equals(v, target) => i
       }
-    val blob = BytesCodec.encodeFsst(values)
-    val target = probeStr.getBytes(UTF_8)
-    val (hits, read) = BytesCodec.selectEquals(blob, target)
-    // ground truth from a full decode
-    val expected = BytesCodec.decode(blob).zipWithIndex.collect {
-      case (v, i) if v != null && java.util.Arrays.equals(v, target) => i
+      assert(hits.toSeq == expected.toSeq && hits.nonEmpty)
+      // the length prefix skips most values: only length-colliding encoded
+      // payloads (plus the table) are touched — far below a full decode
+      val bytesIn = values.collect { case v if v != null => v.length.toLong }.sum
+      assert(read * 4 < bytesIn, s"fsst probe read $read of $bytesIn input bytes")
+      // absent target: still exact (no false positives from the probe path)
+      val (miss, _) = BytesCodec.selectEquals(blob, "no such line in the corpus ___".getBytes(UTF_8))
+      assert(miss.isEmpty)
     }
-    assert(hits.toSeq == expected.toSeq && hits.nonEmpty)
-    // the length prefix skips most values: only length-colliding encoded
-    // payloads (plus the table) are touched — far below a full decode
-    val bytesIn = values.collect { case v if v != null => v.length.toLong }.sum
-    assert(read * 4 < bytesIn, s"fsst probe read $read of $bytesIn input bytes")
-    // absent target: still exact (no false positives from the probe path)
-    val (miss, _) = BytesCodec.selectEquals(blob, "no such line in the corpus ___".getBytes(UTF_8))
-    assert(miss.isEmpty)
   }
 }

@@ -2,7 +2,6 @@ package fsstspark.codec.fsst
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 
 /** Pure-JVM codec tests replicating the reference's test strategy
   * (SURVEY.md §5): roundtrip bit-identity, determinism, serialization
@@ -22,11 +21,11 @@ class FsstSpec extends AnyFunSuite {
     }
   }
 
-  private def lines(path: String): Option[Array[Array[Byte]]] = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), UTF_8).split("\n", -1).map(_.getBytes(UTF_8)))
-  }
+  /** The reference corpus `name`, line-split, wherever it is present. */
+  private def lines(name: String): Option[Array[Array[Byte]]] =
+    TestCorpora.reference(name).map(_.split("\n", -1).map(_.getBytes(UTF_8)))
+
+  private lazy val prose: Array[Array[Byte]] = TestCorpora.prose.map(_.getBytes(UTF_8))
 
   test("roundtrip: multi-input training") {
     val ins = Seq("hello world", "hello there", "world peace", "hello world peace")
@@ -125,16 +124,19 @@ class FsstSpec extends AnyFunSuite {
   }
 
   test("golden corpora: line-split roundtrip over reference testdata") {
-    val corpora = Seq(
-      "/root/reference/testdata/art_of_war.txt",
-      "/root/reference/testdata/en_mobydick.txt",
-      "/root/reference/testdata/zh_tao_te_ching_en.txt",
-      "/root/reference/testdata/logs_apache_2k.log",
-      "/root/reference/testdata/logs_hdfs_2k.log"
-    )
+    // every in-repo corpus, then each reference corpus that is present
+    val corpora: Seq[(String, Option[Array[Array[Byte]]])] =
+      TestCorpora.all.map { case (name, ls) => name -> Some(ls.map(_.getBytes(UTF_8))) } ++
+        Seq(
+          "art_of_war.txt",
+          "en_mobydick.txt",
+          "zh_tao_te_ching_en.txt",
+          "logs_apache_2k.log",
+          "logs_hdfs_2k.log"
+        ).map(name => name -> lines(name))
     var tested = 0
-    corpora.foreach { path =>
-      lines(path).foreach { ls =>
+    corpora.foreach { case (path, present) =>
+      present.foreach { ls =>
         val table = FsstTrainer.train(ls)
         val enc = table.newEncoder()
         val dec = table.newDecoder()
@@ -152,7 +154,7 @@ class FsstSpec extends AnyFunSuite {
   }
 
   test("table size: 2-8 KB serialized for text corpora") {
-    lines("/root/reference/testdata/art_of_war.txt").foreach { ls =>
+    (prose +: lines("art_of_war.txt").toSeq).foreach { ls =>
       val b = FsstTrainer.train(ls).serialize()
       assert(b.length >= 16 && b.length <= 8192, s"table ${b.length} B")
     }
@@ -186,15 +188,16 @@ class FsstSpec extends AnyFunSuite {
   }
 
   test("finalize layout: code ranges are length-partitioned as documented") {
-    val ls = lines("/root/reference/testdata/art_of_war.txt").get
-    val t = FsstTrainer.train(ls)
-    // [0..suffixLim) are 2-byte; 1-byte symbols occupy the top of the range
-    (0 until t.suffixLim).foreach(c => assert(t.symLen(c) == 2))
-    val bl = t.byteLim
-    (bl until t.nSymbols).foreach(c => assert(t.symLen(c) == 1))
-    // 3..8 byte symbols are sorted by length between the 2B block and byteLim
-    val mid = (t.suffixLim until bl).map(t.symLen(_).toInt)
-    val non2 = mid.filter(_ != 2)
-    assert(non2 == non2.sorted)
+    (prose +: lines("art_of_war.txt").toSeq).foreach { ls =>
+      val t = FsstTrainer.train(ls)
+      // [0..suffixLim) are 2-byte; 1-byte symbols occupy the top of the range
+      (0 until t.suffixLim).foreach(c => assert(t.symLen(c) == 2))
+      val bl = t.byteLim
+      (bl until t.nSymbols).foreach(c => assert(t.symLen(c) == 1))
+      // 3..8 byte symbols are sorted by length between the 2B block and byteLim
+      val mid = (t.suffixLim until bl).map(t.symLen(_).toInt)
+      val non2 = mid.filter(_ != 2)
+      assert(non2 == non2.sorted)
+    }
   }
 }
