@@ -836,9 +836,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     */
   private def readParquet[T: scala.reflect.ClassTag](spark: SparkSession,
       path: org.apache.hadoop.fs.Path)(row: org.apache.parquet.example.data.Group => T): Array[T] = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    val reader = GroupReader.open(path, spark.sparkContext.hadoopConfiguration)
     val out = Array.newBuilder[T]
     try {
       var g = reader.read()
@@ -931,13 +929,13 @@ final class ParquetTableIO(root: String) extends TableIO {
       hits.map(_.getString(0)).distinct.toIndexedSeq,
       hits.map(_.getLong(1)).distinct.toIndexedSeq)
 
-  /** Manifest-pruned bulk read for rewrite paths (row-level DELETE): open
-    * ONLY the manifest-named hit files instead of listing and scanning the
-    * whole data directory — at 100 TB a rewrite touching a handful of
-    * chunks must not plan a full-table scan just to semi-join most of it
-    * away. Same tombstone re-filter discipline as the point readers.
+  /** Manifest-pruned bulk read: open ONLY the manifest-named hit files
+    * instead of listing and scanning the whole data directory — at 100 TB
+    * a read touching a handful of chunks must not plan a full-table scan
+    * just to semi-join most of it away. Same tombstone re-filter
+    * discipline as the point readers.
     */
-  def readChunksInFiles(spark: SparkSession, table: String,
+  private def readChunksInFiles(spark: SparkSession, table: String,
       committed: Array[String], files: Seq[String],
       ids: Seq[Long]): Dataset[ChunkResult] = {
     import spark.implicits._
@@ -952,7 +950,7 @@ final class ParquetTableIO(root: String) extends TableIO {
   }
 
   /** One committed-batches snapshot, for callers threading the same view
-    * through a manifest collect and a subsequent [[readChunksInFiles]].
+    * through several reads (the `$chunks` table's plan and tombstone list).
     */
   def committedSnapshot(spark: SparkSession, table: String): Array[String] =
     committedBatches(spark, table)

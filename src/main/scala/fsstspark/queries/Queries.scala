@@ -1185,11 +1185,12 @@ object Queries {
         sum(length(col("text")) - length(regexp_replace(col("text"), "\\s", ""))).as("n_whitespace"))
       .orderBy("lang")
 
-  /** Row-level `DELETE FROM` through SQL — the COPY-ON-WRITE tier
-    * ([[fsstspark.sources.FsstRowDelete]]): a VALUE predicate can never
-    * be chunk-aligned, so the affected chunks decode, drop their
-    * matching rows, re-encode, and swap in under one commit marker. The
-    * audit reads the survivors AND time-travels to the pre-delete
+  /** Row-level `DELETE FROM` through SQL — the group-based
+    * COPY-ON-WRITE operation ([[fsstspark.sources.FsstRowLevelOperation]],
+    * the one UPDATE uses): a VALUE predicate can never be chunk-aligned,
+    * so the chunks a probe matched decode, drop their matching rows,
+    * re-encode, and commit with the victims' tombstones under one marker.
+    * The audit reads the survivors AND time-travels to the pre-delete
     * snapshot; every number reproduces in DuckDB from `documents`.
     */
   def dsv2SqlDeleteRows(s: SparkSession, dir: String): DataFrame = {

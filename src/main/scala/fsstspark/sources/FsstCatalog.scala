@@ -502,11 +502,8 @@ private[sources] final class FsstChunksReader(part: FsstChunksPartition,
     }
     m
   }
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(part.file))
-    .withConf(new org.apache.hadoop.conf.Configuration(conf))
-    .build()
+  private val reader =
+    fsstspark.io.GroupReader.open(new org.apache.hadoop.fs.Path(part.file), conf)
   private var cur: org.apache.spark.sql.catalyst.InternalRow = _
 
   override def next(): Boolean = {

@@ -8,9 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -24,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import fsstspark.codec.{BytesCodec, LongCodec}
-import fsstspark.io.{ManifestEntry, ParquetTableIO}
+import fsstspark.io.{GroupReader, ManifestEntry, ParquetTableIO}
 import fsstspark.pipeline.EncodePipeline
 import fsstspark.util.{Keys, SortableBits}
 
@@ -283,11 +281,11 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
     new FsstWriteBuilder(root, tableName, tableSchema, info)
   }
 
-  /** SQL `UPDATE` / `MERGE INTO` / subquery-conditioned `DELETE` — the
-    * group-based copy-on-write rewrite ([[FsstRowLevelOperation]]).
-    * Translatable DELETE predicates never execute here:
-    * `OptimizeMetadataOnlyDeleteFromTable` converts them back to
-    * [[deleteWhere]] because [[canDeleteWhere]] accepts them.
+  /** SQL `UPDATE` / `MERGE INTO` / every `DELETE` that is not
+    * chunk-aligned — the group-based copy-on-write rewrite
+    * ([[FsstRowLevelOperation]]). Chunk-aligned DELETE predicates never
+    * execute here: `OptimizeMetadataOnlyDeleteFromTable` converts them
+    * back to [[deleteWhere]] because [[canDeleteWhere]] accepts them.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo):
@@ -302,14 +300,19 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
     *    exactly (every chunk fully inside or fully outside): victims
     *    tombstone through the catalog's snapshot-gated delete batch —
     *    no data file is read. `TRUNCATE TABLE` is the always-true case.
-    *  - COPY-ON-WRITE delete for any other Catalyst-evaluable predicate
-    *    ([[FsstRowDelete]]): the chunks that may contain matches are
-    *    pruned via the manifest, decoded, re-encoded without the
-    *    matching rows, and swapped in atomically (replaceChunks) — the
-    *    Iceberg copy-on-write DELETE mode.
+    *    [[canDeleteWhere]] accepts only these; the check reads a
+    *    [[ManifestView]], so a table within the driver-snapshot limits
+    *    decides it with no Spark job.
+    *  - Every other DELETE is refused here, so Spark plans `ReplaceData`
+    *    through the group-based copy-on-write [[FsstRowLevelOperation]]
+    *    that UPDATE and MERGE use: a probe collects the matched
+    *    `_chunk_id`s, the operation scan is runtime-filtered to those
+    *    chunks, Catalyst drops the matching rows, and the kept rows
+    *    re-encode and commit with the victims' tombstones under one
+    *    marker. Chunks the predicate cannot match are never rewritten.
     */
   // canDeleteWhere → deleteWhere run on the same Table instance within
-  // one DELETE: cache the victims so the manifest is scanned ONCE, and
+  // one DELETE: cache the victims so the manifest is read ONCE, and
   // so a concurrent commit between the two calls cannot flip an
   // accepted delete into a mid-execution failure (the plan-time answer
   // is the one executed — standard snapshot-at-plan semantics)
@@ -319,66 +322,25 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
     cachedDelete match {
       case Some((k, v)) if k == filters.toSeq => v
       case _ =>
-        val v = FsstScan.chunkAlignedVictims(root, tableName, filters)
+        val v = FsstScan.chunkAlignedVictims(ManifestView(root, tableName, None), filters)
         cachedDelete = Some((filters.toSeq, v))
         v
     }
 
-  // chunk-aligned predicates delete as pure metadata; anything Catalyst
-  // can evaluate on decoded rows deletes as a copy-on-write rewrite —
-  // but only when the table STATE is rewrite-capable: [[FsstRowDelete]]
-  // refuses schema-evolved victim chunks and duplicate live instances at
-  // execution (hard DELETE failure), while the group-based
-  // [[FsstRowLevelOperation]] path Spark falls back to on `false`
-  // null-pads evolved columns and rewrites identical-content duplicate
-  // instances correctly. Routing those states there turns a refusal
-  // into a working DELETE.
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    asOf.isEmpty && (victimsFor(filters).isDefined ||
-      (FsstRowDelete.supports(filters, tableSchema) && columnSince.isEmpty &&
-        noDuplicateLiveInstances()))
-
-  /** Any (chunk_id, column) with more than one live instance anywhere in
-    * the table? One distributed manifest aggregate, limit-1 collect —
-    * conservative (table-level, not victim-level), which only ever
-    * routes MORE deletes to the group-based path that handles them.
-    * Memoized per Table instance under the same snapshot-at-plan
-    * contract as [[cachedDelete]]: Spark probes `canDeleteWhere` twice
-    * per accepted DELETE (the metadata-only optimizer rule, then the
-    * strategy), and the manifest aggregate must not run twice —
-    * [[deleteWhere]] clears it with the victim cache.
-    */
-  @volatile private var cachedNoDup: Option[Boolean] = None
-
-  private def noDuplicateLiveInstances(): Boolean = cachedNoDup.getOrElse {
-    import org.apache.spark.sql.functions.col
-    val spark = SparkSession.active
-    val r = FsstScan.liveInstanceCounts(
-        new ParquetTableIO(root).manifestOpt(spark, tableName, None), None)
-      .filter(col("live") > 1).isEmpty
-    cachedNoDup = Some(r)
-    r
-  }
+    asOf.isEmpty && victimsFor(filters).isDefined
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(asOf.isEmpty, "cannot delete from a snapshot-pinned fsst table")
-    val spark = SparkSession.active
-    victimsFor(filters) match {
-      case Some(victims) =>
-        // a delete matching nothing commits nothing (no empty delete batch)
-        if (!victims.isEmpty)
-          new ParquetTableIO(root).removeChunks(spark, tableName, victims)
-      case None =>
-        // boundary-crossing predicate: Iceberg copy-on-write semantics —
-        // rewrite the affected chunks without the matching rows under one
-        // atomic snapshot (replaceChunks), so every read path (typed,
-        // connector, time travel) stays consistent
-        FsstRowDelete.deleteRows(spark, root, tableName, tableSchema, filters)
-    }
-    // the plan-time answers are now stale: a reused Table instance must
+    val victims = victimsFor(filters).getOrElse(throw new UnsupportedOperationException(
+      s"DELETE FROM fsst table: ${filters.mkString(" AND ")} is not chunk-aligned — " +
+        "SQL DELETE runs it as a copy-on-write rewrite of the matching chunks"))
+    // a delete matching nothing commits nothing (no empty delete batch)
+    if (!victims.isEmpty)
+      new ParquetTableIO(root).removeChunks(SparkSession.active, tableName, victims)
+    // the plan-time answer is now stale: a reused Table instance must
     // recompute for any further DELETE with the same filters
     cachedDelete = None
-    cachedNoDup = None
   }
 }
 
@@ -975,6 +937,8 @@ private[sources] sealed trait ManifestView {
     * key bounds as String, zone bounds as Long; null when nothing to fold.
     */
   def fold(specs: Array[AggSpec], anchor: String): Array[Any]
+  /** [[FsstScan.chunkAlignedVictims]] over this view. */
+  def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame]
 }
 
 private[sources] object ManifestView {
@@ -1023,6 +987,19 @@ private[sources] object ManifestView {
             .map(java.lang.Long.valueOf).orNull
       }
     }
+    def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] = {
+      val full = FsstScan.fullyTrue(filters).getOrElse(return None)
+      val (victims, rest) = m.partition(e => FsstScan.keySurvives(e.minKey, e.maxKey, filters))
+      // alignment: a chunk that MAY hold a matching key is FULLY covered
+      if (!victims.forall(full)) return None
+      // duplicate-id agreement: tombstones kill the id, so no instance of
+      // a victim id may be a non-victim
+      val ids = victims.iterator.map(_.chunkId).toSet
+      if (rest.exists(e => ids(e.chunkId))) return None
+      val spark = SparkSession.active
+      import spark.implicits._
+      Some(victims.map(e => (e.chunkId, e.column)).distinct.toSeq.toDF("chunk_id", "column"))
+    }
   }
 
   final case class Distributed(m: org.apache.spark.sql.DataFrame) extends ManifestView {
@@ -1066,6 +1043,21 @@ private[sources] object ManifestView {
       val row = m.agg(aggExprs.head, aggExprs.tail.toIndexedSeq: _*).head()
       specs.indices.map(i => if (row.isNullAt(i)) null else row.get(i)).toArray
     }
+    // the alignment check and the duplicate-id agreement check are each a
+    // filter + limit-1 probe (the pruning predicates push into the
+    // manifest parquet scan), and the victims stay a DataFrame the
+    // tombstone write consumes without collecting them to the driver
+    def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] = {
+      val full = FsstScan.fullyTrueCond(filters).getOrElse(return None)
+      val keys = m.select("chunk_id", "column", "min_key", "max_key")
+      val mayMatch = FsstScan.keyPruneCond(filters)
+      if (!keys.filter(mayMatch && !full).isEmpty) return None
+      val victims = keys.filter(mayMatch)
+      if (!keys.filter(!mayMatch)
+          .join(victims.select("chunk_id").distinct(), Seq("chunk_id"), "left_semi")
+          .isEmpty) return None
+      Some(victims.select("chunk_id", "column").distinct())
+    }
   }
 }
 
@@ -1081,23 +1073,23 @@ private[sources] object FsstScan {
   val RuntimeIdPushdownLimit = 10000
 
   /** Per-chunk-id MAX live-instance count over any column, scoped to
-    * `ids` — the shared core of every duplicate-instance guard (the
-    * row-level sibling check, FsstRowDelete's refusal, and
-    * `canDeleteWhere`'s table-level probe). Output columns:
+    * `ids` — the row-level sibling check of a table planned through the
+    * distributed view ([[ManifestView.Distributed.overPlanned]]; the
+    * driver view counts its snapshot rows in Scala). Output columns:
     * (`chunk_id`, `live`). The scoping never builds an unbounded In
     * expression: small id sets push as a predicate, large ones join
     * against a parallelized id frame; `None` means the whole manifest.
     * Callers filter and `limit(1)` BEFORE collecting, so the driver
     * only ever sees violators.
     *
-    * Design note: these guards exist because tombstones address a chunk
+    * Design note: the guard exists because tombstones address a chunk
     * by id (plus a batch GATE), not by instance — a rewrite of one live
     * instance of a duplicated id would also kill its unrewritten
     * sibling. The root-cause alternative is instance-addressed
     * tombstones carrying the victim's own batch, which would let
-    * row-level DML operate on duplicate-id tables and delete all three
-    * guards; it touches the tombstone schema, every read path's filter,
-    * vacuum, and compaction, and duplicate ids with DIVERGING content
+    * row-level DML operate on duplicate-id tables and delete the guard;
+    * it touches the tombstone schema, every read path's filter, vacuum,
+    * and compaction, and duplicate ids with DIVERGING content
     * only arise on hash-bucket-mode append tables (SQL-written ids are
     * salted unique, local-mode ids are content-derived), so the loud
     * refusal + "compact first" answer is the deliberate trade.
@@ -1490,6 +1482,32 @@ private[sources] object FsstScan {
     }
   }
 
+  /** [[fullyTrueCond]] over driver-side manifest rows, comparing in
+    * [[Keys.compareUtf8]] order — the order Spark compares the manifest's
+    * key strings in, so both views decide every chunk alike.
+    */
+  private[sources] def fullyTrue(filters: Array[Filter]): Option[ManifestEntry => Boolean] = {
+    def cmp(a: String, b: String): Int = Keys.compareUtf8(a, b)
+    def one(f: Filter): Option[ManifestEntry => Boolean] = f match {
+      case _: AlwaysTrue => Some(_ => true)
+      case EqualTo("key", v: String) => Some(e => e.minKey == v && e.maxKey == v)
+      case GreaterThan("key", v: String) => Some(e => cmp(e.minKey, v) > 0)
+      case GreaterThanOrEqual("key", v: String) => Some(e => cmp(e.minKey, v) >= 0)
+      case LessThan("key", v: String) => Some(e => cmp(e.maxKey, v) < 0)
+      case LessThanOrEqual("key", v: String) => Some(e => cmp(e.maxKey, v) <= 0)
+      case StringStartsWith("key", p) =>
+        Some(nextAfterPrefix(p) match {
+          case Some(q) => e => cmp(e.minKey, p) >= 0 && cmp(e.maxKey, q) < 0
+          case None => e => cmp(e.minKey, p) >= 0 && e.minKey.startsWith(p)
+        })
+      case And(l, r) => for (a <- one(l); b <- one(r)) yield e => a(e) && b(e)
+      case _ => None
+    }
+    filters.foldLeft(Option[ManifestEntry => Boolean](_ => true)) { (acc, f) =>
+      for (a <- acc; b <- one(f)) yield e => a(e) && b(e)
+    }
+  }
+
   /** The (chunk_id, column) victims of a CHUNK-ALIGNED delete, or None
     * when the predicate does not align. Exactness: every chunk (and
     * every duplicate-id instance — tombstones are id-granular, so all
@@ -1500,32 +1518,14 @@ private[sources] object FsstScan {
     * value predicate cannot prove a chunk fully-covered (null counts are
     * not recorded), so any non-key filter refuses.
     *
-    * Fully distributed: the alignment check and the duplicate-id
-    * agreement check are each a filter + limit-1 probe on the manifest
-    * (the pruning predicates push into the manifest parquet scan), and
-    * the victim set comes back as a DATAFRAME the tombstone write
-    * consumes without ever collecting O(victims) rows to the driver — a
-    * TRUNCATE of a 100 TB table stays metadata-distributed end to end.
+    * The [[ManifestView.Driver]] view decides from its snapshot rows
+    * with no Spark job; the [[ManifestView.Distributed]] view runs two
+    * limit-1 manifest probes and returns the victims as a DataFrame, so
+    * a TRUNCATE of a 100 TB table stays metadata-distributed end to end.
     */
-  def chunkAlignedVictims(root: String, table: String,
-      filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] = {
-    val effective = if (filters.isEmpty) Array[Filter](new AlwaysTrue()) else filters
-    val full = fullyTrueCond(effective).getOrElse(return None)
-    val spark = SparkSession.active
-    val io = new ParquetTableIO(root)
-    val m = io.manifest(spark, table).select("chunk_id", "column", "min_key", "max_key")
-    val mayMatch = keyPruneCond(effective)
-    // alignment: a chunk that MAY contain a matching key but is not
-    // FULLY covered breaks chunk alignment
-    if (!m.filter(mayMatch && !full).isEmpty) return None
-    // duplicate-id agreement: an id with both a victim instance and a
-    // non-victim instance cannot be tombstoned (tombstones kill the id)
-    val victims = m.filter(mayMatch)
-    val nonVictims = m.filter(!mayMatch)
-    if (!nonVictims.join(victims.select("chunk_id").distinct(), Seq("chunk_id"), "left_semi")
-        .isEmpty) return None
-    Some(victims.select("chunk_id", "column").distinct())
-  }
+  def chunkAlignedVictims(view: ManifestView,
+      filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] =
+    view.alignedVictims(if (filters.isEmpty) Array[Filter](new AlwaysTrue()) else filters)
 
   /** Filters this source can use for chunk pruning. */
   def prunable(f: Filter, longOrDouble: Set[String]): Boolean = f match {
@@ -1725,8 +1725,7 @@ private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGr
         "message proj { required int64 chunk_id; optional binary key_blob; }")
     val ids = part.chunkIds.map(java.lang.Long.valueOf).toSet.asJava
     val pred = FilterApi.in(FilterApi.longColumn("chunk_id"), new java.util.HashSet(ids))
-    val reader = ParquetReader.builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(cf.file))
-      .withConf(c).withFilter(FilterCompat.get(pred)).build()
+    val reader = GroupReader.open(new org.apache.hadoop.fs.Path(cf.file), c, FilterCompat.get(pred))
     val out = new java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])]()
     try {
       var g = reader.read()

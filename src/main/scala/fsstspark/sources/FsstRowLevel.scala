@@ -8,11 +8,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** GROUP-BASED (copy-on-write) row-level operation for the chunk
   * catalog — the DSv2 surface behind SQL `UPDATE`, `MERGE INTO`, and
-  * subquery-conditioned `DELETE` (Iceberg's copy-on-write mode;
-  * translatable DELETE predicates never reach this path — Spark's
-  * `OptimizeMetadataOnlyDeleteFromTable` routes them back to
-  * [[FsstTable.deleteWhere]], keeping the chunk-aligned metadata delete
-  * and the [[FsstRowDelete]] rewrite as-is).
+  * every `DELETE` that is not chunk-aligned, subquery conditions
+  * included (Iceberg's copy-on-write mode). Only chunk-aligned DELETE
+  * predicates skip this path: Spark's `OptimizeMetadataOnlyDeleteFromTable`
+  * routes them to [[FsstTable.deleteWhere]], which tombstones whole
+  * chunks without reading them.
   *
   * Contract split between the two halves Spark asks for:
   *  - '''scan''' ([[newScanBuilder]]): must return EVERY row of every
@@ -40,8 +40,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * twice) are handled, not refused: the scan plans BOTH instances (they
   * group by (chunk_id, batch)), both copies of the rows flow through the
   * rewrite, and the tombstone kills every instance older than the gating
-  * batch — unlike the predicate-DELETE rewrite ([[FsstRowDelete]]),
-  * which cannot know it read two copies.
+  * batch.
   *
   * 100 TB shape: scan planning is the connector's filter-pushed manifest
   * pruning (O(surviving chunks) to the driver); the rewrite itself is

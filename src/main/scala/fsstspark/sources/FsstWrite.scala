@@ -57,7 +57,7 @@ final class FsstWriteBuilder(root: String, table: String, tableSchema: StructTyp
     * chunks this very write is adding.
     */
   override def overwrite(filters: Array[org.apache.spark.sql.sources.Filter]): WriteBuilder = {
-    overwriteVictims = Some(FsstScan.chunkAlignedVictims(root, table, filters).getOrElse(
+    overwriteVictims = Some(FsstScan.chunkAlignedVictims(ManifestView(root, table, None), filters).getOrElse(
       throw new UnsupportedOperationException(
         "INSERT OVERWRITE on an fsst table needs a chunk-aligned key predicate (or a full " +
           s"overwrite); ${filters.mkString(" AND ")} crosses chunk boundaries — " +

@@ -804,10 +804,9 @@ class DataSourceSpec extends AnyFunSuite {
     val df = pagesDf.orderBy("url").coalesce(1)
     // identical content twice: content-derived chunk ids collide, so the
     // table legitimately holds duplicate rows under duplicate (chunk_id,
-    // column) instances. canDeleteWhere must refuse the FsstRowDelete
-    // tier here (its id-granular rewrite cannot represent the state) and
-    // let the group-based row-level path handle it — which plans BOTH
-    // instances and rewrites both copies.
+    // column) instances. A value predicate is not chunk-aligned, so
+    // canDeleteWhere refuses it and the group-based row-level path runs
+    // it — which plans BOTH instances and rewrites both copies.
     io.writeChunks(EncodePipeline.encodeColumnsLocal(df, col("url"), pageSpecs, 8L << 10), "pages")
     io.writeChunks(EncodePipeline.encodeColumnsLocal(df, col("url"), pageSpecs, 8L << 10), "pages")
     val cat = s"fsst_dupdel_${math.abs(root.hashCode)}"
@@ -1378,6 +1377,24 @@ class DataSourceSpec extends AnyFunSuite {
     assert(jobsAbove > 1, s"the above-limit path ran only $jobsAbove jobs")
   }
 
+  test("a single-key SQL DELETE runs no more Spark jobs than a single-key UPDATE") {
+    val root = freshRoot()
+    val (_, live) = threeBatchesAndATombstone(root)
+    val cat = catalogOn(root, "fsst_dmljobs")
+    val keys = live.select("key").orderBy("key").collect().map(_.getString(0))
+    val (updKey, delKey) = (keys(keys.length / 3), keys(2 * keys.length / 3))
+    def count(): Long = spark.sql(s"SELECT count(*) FROM $cat.pages").collect()(0).getLong(0)
+    val n = count()
+    val updateJobs = jobsOf(spark.sql(
+      s"UPDATE $cat.pages SET ts = ts + 1 WHERE key = '$updKey'").collect())
+    val deleteJobs = jobsOf(spark.sql(s"DELETE FROM $cat.pages WHERE key = '$delKey'").collect())
+    assert(deleteJobs <= updateJobs,
+      s"single-key DELETE ran $deleteJobs Spark jobs, UPDATE $updateJobs")
+    assert(count() == n - 1)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.pages WHERE key = '$delKey'")
+      .collect()(0).getLong(0) == 0)
+  }
+
   test("the driver snapshot sees a swapped table directory, a vacuum, a repair and an in-place rewrite") {
     import org.apache.hadoop.fs.Path
     val root = freshRoot()
@@ -1547,6 +1564,37 @@ class DataSourceSpec extends AnyFunSuite {
     }
     val pins = Seq(None, Some(firstBatch))
     assert(pins.map(aggs) == aboveLimit(root)(pins.map(aggs)), "pushed aggregates differ")
+    // the chunk-aligned DELETE decision: the same victims, or None on both
+    val chunkKeys = io.manifest(spark, "pages").filter(col("column") === "text")
+      .select("min_key", "max_key").collect().map(r => (r.getString(0), r.getString(1)))
+    val (splitLo, splitHi) = chunkKeys.find { case (a, b) => a < b }
+      .getOrElse(fail("fixture yielded only single-key chunks"))
+    assert(splitLo + "\u0000" < splitHi)
+    val (kMin, kMax) = (chunkKeys.map(_._1).min, chunkKeys.map(_._2).max)
+    val deletes: Seq[(String, Array[Filter])] = Seq(
+      "key =" -> Array(EqualTo("key", k2)),
+      "key <" -> Array(LessThan("key", kMin)),
+      "key <=" -> Array(LessThanOrEqual("key", kMax)),
+      "key >" -> Array(GreaterThan("key", kMax)),
+      "key >=" -> Array(GreaterThanOrEqual("key", kMin)),
+      "key prefix" -> Array(StringStartsWith("key", "https://")),
+      "And" -> Array(And(GreaterThanOrEqual("key", kMin), LessThanOrEqual("key", kMax))),
+      "AlwaysTrue" -> Array(AlwaysTrue()),
+      "a key that splits a chunk" -> Array(LessThanOrEqual("key", splitLo + "\u0000")),
+      "a value predicate" -> Array(LessThan("ts", mid)))
+    def victims(filters: Array[Filter]): Option[Set[(Long, String)]] =
+      FsstScan.chunkAlignedVictims(ManifestView(root, "pages", None), filters)
+        .map(_.collect().map(r => (r.getLong(0), r.getString(1))).toSet)
+    val driverVictims = deletes.map { case (_, f) => victims(f) }
+    val distributedVictims = aboveLimit(root)(deletes.map { case (_, f) => victims(f) })
+    deletes.map(_._1).zip(driverVictims.zip(distributedVictims)).foreach {
+      case (name, (driver, distributed)) =>
+        assert(driver == distributed, s"$name: chunk-aligned victims differ")
+    }
+    val liveRows = io.manifest(spark, "pages").select("chunk_id", "column").distinct().count()
+    assert(driverVictims.flatten.map(_.size.toLong).toSet == Set(0L, liveRows),
+      "fixture: expected both no-victim and whole-table aligned deletes")
+    assert(driverVictims.takeRight(2) == Seq(None, None))
   }
 
   test("a manifest past either driver limit plans through the distributed path") {
