@@ -241,6 +241,29 @@ object ParquetTableIO {
     * and 8.8 s decoding, against 15.5 s distributed.
     */
   val DriverManifestMaxBatches: Int = 1024
+
+  /** Explicit manifest schema, used on EVERY manifest read: batch
+    * partitions written before zone-map stats existed (round ≤3) lack
+    * `value_min`/`value_max` and must read back as null (= not prunable)
+    * rather than leaving the resolved schema to whichever footer
+    * inference samples in a mixed-generation directory. A manifest file
+    * holds every column but the `batch` partition.
+    */
+  private[io] val ManifestSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("file", StringType), StructField("column", StringType),
+      StructField("chunk_id", LongType), StructField("codec", StringType),
+      StructField("n_rows", LongType), StructField("bytes_in", LongType),
+      StructField("bytes_out", LongType), StructField("min_key", StringType),
+      StructField("max_key", StringType), StructField("value_min", LongType),
+      StructField("value_max", LongType), StructField("batch", StringType)))
+  }
+
+  /** Longest wait, after a write job failed, for its remaining tasks to
+    * stop before the batch is aborted.
+    */
+  private[io] val FailedWriteWaitMillis: Long = 30L * 1000
 }
 
 final class ParquetTableIO(root: String) extends TableIO {
@@ -250,13 +273,16 @@ final class ParquetTableIO(root: String) extends TableIO {
   private def commitsDir(table: String) = s"$root/$table/commits"
 
   // ------------------------------------------------------ batch commits
-  // A batch becomes visible only when its commit marker exists; the append
-  // order is data → manifest rows → marker. A crash at any point leaves an
-  // UNCOMMITTED batch that every read path ignores, so the ingest-dedup
-  // set never contains a torn batch's chunks and a replay re-lands them
-  // under a fresh batch id — no duplicates, no chunks stranded without
-  // manifest rows (the poor-man's Iceberg snapshot commit, SURVEY.md §7.0;
-  // orphaned uncommitted directories are inert garbage for a GC to sweep).
+  // A batch becomes visible only when its commit marker exists; the write
+  // order is chunk files (tasks) → manifest file → tombstones → marker
+  // (the last three on the driver, [[commitBatch]]). A crash at any point
+  // leaves an UNCOMMITTED batch that every read path ignores, so the
+  // ingest-dedup set never contains a torn batch's chunks and a replay
+  // re-lands them under a fresh batch id — no duplicates, no chunks
+  // stranded without manifest rows (the poor-man's Iceberg snapshot
+  // commit, SURVEY.md §7.0; a failed write aborts its batch, and
+  // directories a crash leaves uncommitted are inert garbage for a GC to
+  // sweep).
 
   private def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -273,7 +299,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     * silent data loss; the batch stays uncommitted (invisible) and the
     * write can be re-run, which mints a fresh, in-order id.
     */
-  private def commitBatch(spark: SparkSession, table: String, batch: String): Unit = {
+  private def markCommitted(spark: SparkSession, table: String, batch: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(commitsDir(table))
     val f = fs(spark, commitsDir(table))
     f.mkdirs(dir)
@@ -338,7 +364,7 @@ final class ParquetTableIO(root: String) extends TableIO {
       .map(_.stripPrefix("batch="))
     val already = committedBatches(spark, table).toSet
     val missing = batches.filterNot(already)
-    missing.foreach(b => commitBatch(spark, table, b))
+    missing.foreach(b => markCommitted(spark, table, b))
     missing.length.toLong
   }
 
@@ -351,30 +377,14 @@ final class ParquetTableIO(root: String) extends TableIO {
     org.apache.spark.sql.Encoders.product[ChunkResult].schema
       .add("batch", org.apache.spark.sql.types.StringType)
 
-  /** Explicit manifest schema, used on EVERY manifest read: batch
-    * partitions written before zone-map stats existed (round ≤3) lack
-    * `value_min`/`value_max` and must read back as null (= not prunable)
-    * rather than leaving the resolved schema to whichever footer
-    * inference samples in a mixed-generation directory.
-    */
-  private val manifestSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("file", StringType), StructField("column", StringType),
-      StructField("chunk_id", LongType), StructField("codec", StringType),
-      StructField("n_rows", LongType), StructField("bytes_in", LongType),
-      StructField("bytes_out", LongType), StructField("min_key", StringType),
-      StructField("max_key", StringType), StructField("value_min", LongType),
-      StructField("value_max", LongType), StructField("batch", StringType)))
-  }
-
   private def readManifestRaw(spark: SparkSession, table: String): DataFrame = {
     assertManifestNotLegacy(spark, table)
     val p = new org.apache.hadoop.fs.Path(manifestDir(table))
     if (!fs(spark, manifestDir(table)).exists(p)) {
       assertNoManifestOk(spark, table, committedBatches(spark, table))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestSchema)
-    } else spark.read.schema(manifestSchema).parquet(manifestDir(table))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        ParquetTableIO.ManifestSchema)
+    } else spark.read.schema(ParquetTableIO.ManifestSchema).parquet(manifestDir(table))
   }
 
   /** A missing manifest directory: only a table with NO DATA reads as an
@@ -517,44 +527,16 @@ final class ParquetTableIO(root: String) extends TableIO {
         "left_anti")
     }
 
-  /** Append a batch of chunks. Each batch lands under its own `batch=`
-    * partition directory, so the new manifest rows are derived by scanning
-    * ONLY this batch's files (metadata columns, blobs never read) and
-    * APPENDED — manifest maintenance is O(batch), never O(table). The r2
-    * shape re-scanned the whole data directory per append, which at ~6M
-    * chunks would be a full metadata rescan on every streaming micro-batch.
-    * The batch is invisible until its commit marker lands (see above).
+  /** Append a batch of chunks: ONE Spark job writes every chunk into the
+    * batch's own `batch=` directory through [[ChunkFileWriter]] and
+    * returns the chunks' manifest rows to the driver, which writes them
+    * as one manifest file and flips the marker ([[commitBatch]]) —
+    * manifest maintenance is O(batch), never O(table), and no step
+    * re-reads the files just written. The batch is invisible until its
+    * commit marker lands (see above); a failed job aborts it.
     */
-  override def writeChunks(results: Dataset[ChunkResult], table: String): Unit = {
-    val spark = results.sparkSession
-    val batch = writeBatch(results, table)
-    commitBatch(spark, table, batch)
-  }
-
-  /** Data + manifest rows for one batch, WITHOUT the commit marker. */
-  private def writeBatch(results: Dataset[ChunkResult], table: String): String = {
-    val spark = results.sparkSession
-    assertNotLegacy(spark, table)
-    // commits/ exists from the FIRST byte of data: a crash during the very
-    // first batch (data written, no marker yet) must read back as an empty
-    // table with an empty commit set — not as a "legacy pre-marker catalog"
-    // (assertNotLegacy's data-without-commits test), which would hard-error
-    // every read and make the torn batch unrecoverable by replay.
-    fs(spark, commitsDir(table)).mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)))
-    val batch = mintBatchId(spark, table)
-    results.withColumn("batch", lit(batch))
-      .write.partitionBy("batch", "column").mode(SaveMode.Append).parquet(dataDir(table))
-    // manifest rows land under their own batch= partition, so incremental
-    // consumers ([[manifestForBatches]]) prune to NEW batches at directory
-    // level instead of scanning the whole manifest per micro-batch
-    spark.read.parquet(s"${dataDir(table)}/batch=$batch")
-      .select(input_file_name().as("file"), col("column"), col("chunk_id"),
-        col("codec"), col("n_rows"), col("bytes_in"), col("bytes_out"),
-        col("min_key"), col("max_key"), col("value_min"), col("value_max"),
-        lit(batch).as("batch"))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table))
-    batch
-  }
+  override def writeChunks(results: Dataset[ChunkResult], table: String): Unit =
+    writeBatch(results.sparkSession, table, results, None)
 
   /** Atomic swap: the new batch's data/manifest land uncommitted, the
     * deletes land GATED on that batch, and the single commit marker flips
@@ -563,25 +545,67 @@ final class ParquetTableIO(root: String) extends TableIO {
     * Never duplicates, never a gap.
     */
   override def replaceChunks(spark: SparkSession, table: String,
-      results: Dataset[ChunkResult], removeChunkIds: DataFrame): Unit = {
-    val batch = writeBatch(results, table)
-    removeChunkIds.select(col("chunk_id").cast("long"), col("column").cast("string"),
-        lit(batch).as("gated_by"))
-      .write.mode(SaveMode.Append).parquet(tombDir(table))
-    commitBatch(spark, table, batch)
+      results: Dataset[ChunkResult], removeChunkIds: DataFrame): Unit =
+    writeBatch(spark, table, results, Some(removeChunkIds))
+
+  private def writeBatch(spark: SparkSession, table: String, results: Dataset[ChunkResult],
+      victims: Option[DataFrame]): Unit = {
+    val batch = beginBatch(spark, table)
+    val dir = batchDataDir(table, batch)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val entries =
+      try writeJob(spark, batch)(
+        results.rdd.mapPartitions(ChunkFileWriter.writePartition(dir, conf.value, _)).collect())
+      catch { case e: Throwable => abortBatch(spark, table, batch); throw e }
+    commitBatch(spark, table, batch, entries, victims)
   }
 
-  // ------------------------------------------ external-writer surface
-  // The DSv2 write path ([[fsstspark.sources]]) writes chunk parquet
-  // files from EXECUTOR tasks (parquet-hadoop, not a Spark write job),
-  // then commits through the same marker protocol: beginBatch mints the
-  // id, tasks land files under batchColumnDir, commitExternalBatch
-  // appends the manifest rows and flips the marker. A crash anywhere
-  // before the marker leaves an invisible torn batch, exactly like
-  // writeChunks.
+  /** Runs a write's Spark job under a job tag of its own. Spark fails a
+    * job (a `SparkException`) as soon as one task fails, while its other
+    * tasks may still run and write chunk files; so the job's tasks are
+    * then cancelled and awaited (for at most
+    * [[ParquetTableIO.FailedWriteWaitMillis]]) before the caller aborts
+    * the batch, or they would leave files in the directory the abort just
+    * removed.
+    */
+  private def writeJob[T](spark: SparkSession, batch: String)(job: => T): T = {
+    import org.apache.spark.JobExecutionStatus.RUNNING
+    val sc = spark.sparkContext
+    val tag = s"fsst-write-$batch"
+    sc.addJobTag(tag)
+    try job
+    catch {
+      case e: org.apache.spark.SparkException =>
+        sc.cancelJobsWithTag(tag)
+        // the status store learns of job and task ends asynchronously:
+        // wait until it has the job, ended, with no task still running
+        val st = sc.statusTracker
+        def running = {
+          val jobs = st.getJobIdsForTag(tag).flatMap(st.getJobInfo(_))
+          jobs.isEmpty || jobs.exists(j => j.status == RUNNING ||
+            j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0)))
+        }
+        val deadline = System.currentTimeMillis() + ParquetTableIO.FailedWriteWaitMillis
+        while (running && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
+  }
 
-  /** Mint a batch for an external writer (commits dir exists from the
-    * first byte of data — see [[writeBatch]]).
+  // ------------------------------------------------ batch write surface
+  // Every catalog write runs the same three steps: beginBatch mints the
+  // id, tasks write chunk files under batchDataDir through
+  // [[ChunkFileWriter]] (a writeChunks job here, the connector's DSv2
+  // write in [[fsstspark.sources]]) and return their manifest rows, and
+  // the driver's commitBatch lands the manifest and flips the marker. A
+  // crash anywhere before the marker leaves an invisible torn batch.
+
+  /** Mint a batch for a write. commits/ exists from the FIRST byte of
+    * data: a crash during the very first batch (data written, no marker
+    * yet) must read back as an empty table with an empty commit set — not
+    * as a "legacy pre-marker catalog" (assertNotLegacy's
+    * data-without-commits test), which would hard-error every read and
+    * make the torn batch unrecoverable by replay.
     */
   def beginBatch(spark: SparkSession, table: String): String = {
     assertNotLegacy(spark, table)
@@ -589,48 +613,71 @@ final class ParquetTableIO(root: String) extends TableIO {
     mintBatchId(spark, table)
   }
 
-  /** Directory an external writer's task files for (batch, column) go in. */
-  def batchColumnDir(table: String, batch: String, column: String): String =
-    s"${dataDir(table)}/batch=$batch/column=$column"
-
-  /** One batch's data directory (the external writer's commit-time
-    * orphan sweep lists it).
-    */
+  /** One batch's data directory: [[ChunkFileWriter]] writes under it. */
   def batchDataDir(table: String, batch: String): String =
     s"${dataDir(table)}/batch=$batch"
 
-  /** Commit an externally-written batch: append its manifest rows (under
-    * the batch's own manifest partition) and flip the commit marker.
-    * `manifest` must carry the manifest schema minus `batch` (file,
-    * column, chunk_id, codec, n_rows, bytes_in, bytes_out, min_key,
-    * max_key, value_min, value_max).
+  /** Commit a batch whose chunk files are on disk, with `entries` their
+    * manifest rows and `victims` (chunk_id, column) rows to delete in the
+    * SAME snapshot (`replaceChunks`, INSERT OVERWRITE, row-level DML). In
+    * order, on the driver:
+    *  1. refuse a (chunk_id, column) named twice — every later scan would
+    *     fail on "duplicate chunk" — and delete files in the batch
+    *     directory that no entry names (attempts of an executor that died
+    *     never ran their own abort, and the whole-directory readers would
+    *     see their chunks as duplicates);
+    *  2. write the entries as one manifest file under the batch's
+    *     manifest partition, with no Spark job;
+    *  3. write the victims as tombstones gated on this batch;
+    *  4. flip the commit marker, so adds and deletes become visible
+    *     together.
+    * A failure at any step aborts the batch: the table is untouched (gated
+    * tombstones of an uncommitted batch are inert). No entries and no
+    * victims = nothing to commit: the batch is aborted, no empty snapshot.
     */
-  def commitExternalBatch(spark: SparkSession, table: String, batch: String,
-      manifest: DataFrame): Unit = {
-    manifest.withColumn("batch", lit(batch))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table))
-    commitBatch(spark, table, batch)
+  def commitBatch(spark: SparkSession, table: String, batch: String,
+      entries: Array[ManifestEntry], victims: Option[DataFrame]): Unit =
+    try {
+      entries.groupBy(e => (e.chunkId, e.column)).collectFirst {
+        case ((cid, c), g) if g.length > 1 =>
+          throw new IllegalStateException(
+            s"catalog table '$table': chunk id $cid for column '$c' appears twice in batch " +
+              s"'$batch' — committing would make every scan fail; the batch was aborted.")
+      }
+      deleteOrphanFiles(spark, table, batch, entries)
+      if (entries.isEmpty && victims.isEmpty) abortBatch(spark, table, batch)
+      else {
+        if (entries.nonEmpty)
+          ChunkFileWriter.writeManifest(new org.apache.hadoop.fs.Path(
+            s"${manifestDir(table)}/batch=$batch/part-${java.util.UUID.randomUUID()}.parquet"),
+            spark.sparkContext.hadoopConfiguration, entries)
+        victims.foreach(writeTombstones(_, table, batch))
+        markCommitted(spark, table, batch)
+      }
+    } catch { case e: Throwable => abortBatch(spark, table, batch); throw e }
+
+  /** Remove files under the batch directory that no entry names. Paths
+    * compare scheme-normalized.
+    */
+  private def deleteOrphanFiles(spark: SparkSession, table: String, batch: String,
+      entries: Array[ManifestEntry]): Unit = {
+    val dirP = new org.apache.hadoop.fs.Path(batchDataDir(table, batch))
+    val f = fs(spark, dataDir(table))
+    if (!f.exists(dirP)) return
+    val named = entries.iterator.map(e => new org.apache.hadoop.fs.Path(e.file).toUri.getPath).toSet
+    val it = f.listFiles(dirP, true)
+    while (it.hasNext) {
+      val st = it.next()
+      if (visible(st.getPath.getName) && !named.contains(st.getPath.toUri.getPath))
+        f.delete(st.getPath, false)
+    }
   }
 
-  /** Commit an externally-written batch TOGETHER with chunk deletes, as
-    * ONE snapshot — the external-writer form of [[replaceChunks]] and
-    * the primitive `INSERT OVERWRITE` needs: the new data and manifest
-    * are already on disk (uncommitted), the tombstones land GATED on
-    * this batch, and the single commit marker flips adds and deletes
-    * into visibility together. A crash before the marker leaves the old
-    * state intact (uncommitted data + inert gated tombstones); after,
-    * the new state. `victims` carries (chunk_id, column); `manifest`
-    * may be empty (a pure-overwrite-to-empty still deletes atomically).
-    */
-  def commitExternalBatchWithDeletes(spark: SparkSession, table: String, batch: String,
-      manifest: Option[DataFrame], victims: DataFrame): Unit = {
-    manifest.foreach(_.withColumn("batch", lit(batch))
-      .write.partitionBy("batch").mode(SaveMode.Append).parquet(manifestDir(table)))
+  /** Deletes gated on `batch`: they take effect when its marker lands. */
+  private def writeTombstones(victims: DataFrame, table: String, batch: String): Unit =
     victims.select(col("chunk_id").cast("long"), col("column").cast("string"),
         lit(batch).as("gated_by"))
       .write.mode(SaveMode.Append).parquet(tombDir(table))
-    commitBatch(spark, table, batch)
-  }
 
   /** A fresh id strictly after every id this table has committed —
     * public for non-batch catalog metadata that must order against the
@@ -640,13 +687,15 @@ final class ParquetTableIO(root: String) extends TableIO {
   def newWatermark(spark: SparkSession, table: String): String =
     mintBatchId(spark, table)
 
-  /** Abort an externally-written batch: delete its (uncommitted, hence
-    * invisible) data directory. Idempotent.
+  /** Abort an uncommitted (hence invisible) batch: delete its data
+    * directory and manifest partition. Idempotent.
     */
   def abortBatch(spark: SparkSession, table: String, batch: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${dataDir(table)}/batch=$batch")
     val f = fs(spark, dataDir(table))
-    if (f.exists(p)) f.delete(p, true)
+    Seq(batchDataDir(table, batch), s"${manifestDir(table)}/batch=$batch").foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      if (f.exists(p)) f.delete(p, true)
+    }
   }
 
   /** Full manifest rebuild from the (committed) data files — an explicit
@@ -979,15 +1028,8 @@ final class ParquetTableIO(root: String) extends TableIO {
     * its committed set. Legacy null-gated tombstones (pre-round-4) remain
     * readable: they apply to every snapshot.
     */
-  override def removeChunks(spark: SparkSession, table: String, chunkIds: DataFrame): Unit = {
-    assertNotLegacy(spark, table)
-    fs(spark, commitsDir(table)).mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)))
-    val batch = mintBatchId(spark, table)
-    chunkIds.select(col("chunk_id").cast("long"), col("column").cast("string"),
-        lit(batch).as("gated_by"))
-      .write.mode(SaveMode.Append).parquet(tombDir(table))
-    commitBatch(spark, table, batch)
-  }
+  override def removeChunks(spark: SparkSession, table: String, chunkIds: DataFrame): Unit =
+    commitBatch(spark, table, beginBatch(spark, table), Array.empty, Some(chunkIds))
 
   override def tableExists(spark: SparkSession, table: String): Boolean =
     committedBatches(spark, table).nonEmpty

@@ -1022,7 +1022,7 @@ private[sources] object ManifestView {
     def overPlanned(planned: Map[Long, Int]): Option[(Long, Long)] = {
       val spark = m.sparkSession
       import spark.implicits._
-      FsstScan.liveInstanceCounts(m, Some(planned.keys.toSeq))
+      FsstScan.liveInstanceCounts(m, planned.keys.toSeq)
         .join(planned.toSeq.toDF("chunk_id", "planned"), "chunk_id")
         .filter(col("live") > col("planned"))
         .limit(1).collect().headOption.map(r => (r.getLong(0), r.getLong(1)))
@@ -1078,7 +1078,7 @@ private[sources] object FsstScan {
     * driver view counts its snapshot rows in Scala). Output columns:
     * (`chunk_id`, `live`). The scoping never builds an unbounded In
     * expression: small id sets push as a predicate, large ones join
-    * against a parallelized id frame; `None` means the whole manifest.
+    * against a parallelized id frame.
     * Callers filter and `limit(1)` BEFORE collecting, so the driver
     * only ever sees violators.
     *
@@ -1095,17 +1095,15 @@ private[sources] object FsstScan {
     * refusal + "compact first" answer is the deliberate trade.
     */
   def liveInstanceCounts(m: org.apache.spark.sql.DataFrame,
-      ids: Option[Seq[Long]]): org.apache.spark.sql.DataFrame = {
+      ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, count, max}
-    val scoped = ids match {
-      case Some(s) if s.size <= RuntimeIdPushdownLimit =>
-        m.filter(col("chunk_id").isInCollection(s))
-      case Some(s) =>
+    val scoped =
+      if (ids.size <= RuntimeIdPushdownLimit) m.filter(col("chunk_id").isInCollection(ids))
+      else {
         val spark = m.sparkSession
         import spark.implicits._
-        m.join(s.toDF("chunk_id"), "chunk_id")
-      case None => m
-    }
+        m.join(ids.toDF("chunk_id"), "chunk_id")
+      }
     scoped.groupBy(col("chunk_id"), col("column")).agg(count("*").as("n"))
       .groupBy(col("chunk_id")).agg(max(col("n")).as("live"))
   }

@@ -28,10 +28,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - '''write''' ([[newWriteBuilder]]): receives the affected groups'
   *    rows back (updated / merged / filtered by Catalyst — subqueries
   *    included, since the condition is evaluated by the engine, not
-  *    translated), re-encodes them through the shared
-  *    [[FsstBatchWrite]] task path, and commits adds + tombstones for
-  *    the planned victims under ONE marker
-  *    ([[fsstspark.io.ParquetTableIO.commitExternalBatchWithDeletes]]) —
+    *    translated), re-encodes them through the shared
+  *    [[FsstBatchWrite]] task path (the catalog's
+  *    [[fsstspark.io.ChunkFileWriter]]), and commits adds + tombstones
+  *    for the planned victims under ONE marker through the catalog's one
+  *    commit ([[fsstspark.io.ParquetTableIO.commitBatch]]: the manifest
+  *    file is written on the driver, the tombstones by a Spark job) —
   *    a crash anywhere leaves the pre-operation state, and `VERSION AS
   *    OF` a pre-operation snapshot still reads the old chunks
   *    (batch-scoped tombstones).

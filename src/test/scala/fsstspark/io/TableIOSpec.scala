@@ -1,6 +1,6 @@
 package fsstspark.io
 
-import fsstspark.pipeline.EncodePipeline
+import fsstspark.pipeline.{EncodePipeline, KV}
 import fsstspark.queries.Queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -78,5 +78,56 @@ class TableIOSpec extends AnyFunSuite {
     assert(n > 0 && io.manifest(spark, "docs").count() == n)
     assert(EncodePipeline.verify(half, EncodePipeline.decodeBytes(io.readChunks(spark, "docs")))
       .filter(!col("matched")).count() == 0)
+  }
+
+  /** The `batch=` directories under a table's data and manifest roots. */
+  private def batchDirs(root: String, table: String): Set[String] =
+    Seq("data", "manifest").flatMap { d =>
+      Option(new java.io.File(s"$root/$table/$d").listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("batch=")).map(n => s"$d/$n")
+    }.toSet
+
+  test("a writeChunks that fails in one task leaves the table unchanged") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("failed-write").toString
+    val io = new ParquetTableIO(root)
+    val kv = Queries.docsKV(spark, sf)
+    io.writeChunks(EncodePipeline.encodeBytesLocal(kv, "text", 32L << 10), "docs")
+    val before = io.readChunks(spark, "docs").select("chunk_id", "column", "n_rows")
+      .as[(Long, String, Long)].collect().sorted.toSeq
+    val dirs = batchDirs(root, "docs")
+    // four tasks: partition 2 fails at once, while the other three are
+    // still encoding their first chunk (a slow encode, made slower here).
+    // Spark fails the job without waiting for them, and each then writes
+    val failing = EncodePipeline.encodeBytesLocal(kv.repartition(4).localCheckpoint().as[KV],
+        "text", 32L << 10).mapPartitions { it =>
+      if (org.apache.spark.TaskContext.getPartitionId() == 2)
+        throw new IllegalStateException("injected encode failure")
+      it.zipWithIndex.map { case (r, i) => if (i == 0) Thread.sleep(1000); r }
+    }
+    val e = intercept[Exception](io.writeChunks(failing, "docs"))
+    assert(e.getMessage.contains("injected encode failure"), e.getMessage)
+    Thread.sleep(3000) // past the slow chunks: whatever those tasks write is on disk now
+    assert(io.readChunks(spark, "docs").select("chunk_id", "column", "n_rows")
+      .as[(Long, String, Long)].collect().sorted.toSeq == before)
+    assert(batchDirs(root, "docs") == dirs, "the failed write left its batch behind")
+  }
+
+  test("a batch naming one (chunk_id, column) twice is refused and aborted") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("dup-write").toString
+    val io = new ParquetTableIO(root)
+    val kv = Queries.docsKV(spark, sf)
+    val enc = EncodePipeline.encodeBytesLocal(kv, "text", 32L << 10)
+    io.writeChunks(enc.filter(col("chunk_id") % 2 === 0), "docs")
+    val committed = io.committedBatchIds(spark, "docs").toSeq
+    val n = io.readChunks(spark, "docs").count()
+    val dirs = batchDirs(root, "docs")
+    val odd = enc.filter(col("chunk_id") % 2 =!= 0)
+    val e = intercept[IllegalStateException](io.writeChunks(odd.union(odd.limit(1)), "docs"))
+    assert(e.getMessage.contains("appears twice"), e.getMessage)
+    assert(io.committedBatchIds(spark, "docs").toSeq == committed)
+    assert(io.readChunks(spark, "docs").count() == n)
+    assert(batchDirs(root, "docs") == dirs, "the refused batch was not aborted")
   }
 }

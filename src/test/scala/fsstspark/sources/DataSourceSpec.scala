@@ -1099,23 +1099,22 @@ class DataSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("chunk-aligned"), s"got: ${e.getMessage}")
   }
 
-  test("liveInstanceCounts: In-pushdown, join, and whole-manifest branches agree") {
+  test("liveInstanceCounts: In-pushdown and join branches agree") {
     import spark.implicits._
     // manifest-shaped frame: chunk 1 is a duplicate instance (column 'a'
     // twice = two live siblings), chunk 2 is clean (two DIFFERENT columns
     // = one instance), chunk 3 is clean single-column
     val m = Seq((1L, "a"), (1L, "a"), (2L, "a"), (2L, "b"), (3L, "a"))
       .toDF("chunk_id", "column")
-    def counts(ids: Option[Seq[Long]]): Map[Long, Long] =
+    def counts(ids: Seq[Long]): Map[Long, Long] =
       FsstScan.liveInstanceCounts(m, ids).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts(None) == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
     // small id set → pushed In predicate; scoping drops unlisted chunks
-    assert(counts(Some(Seq(1L, 3L))) == Map(1L -> 2L, 3L -> 1L))
+    assert(counts(Seq(1L, 3L)) == Map(1L -> 2L, 3L -> 1L))
     // id set past RuntimeIdPushdownLimit → the join branch; same answer
     val big = (1L to (FsstScan.RuntimeIdPushdownLimit + 5L)).toSeq
     assert(big.size > FsstScan.RuntimeIdPushdownLimit)
-    assert(counts(Some(big)) == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
+    assert(counts(big) == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
   }
 
   test("ALTER TABLE DROP COLUMN: purge, resurrection-safe re-ADD, residue recovery, guards") {
@@ -1375,6 +1374,54 @@ class DataSourceSpec extends AnyFunSuite {
     // above the limit the same read plans through manifest jobs
     val jobsAbove = aboveLimit(root)(jobsOf(spark.sql(query).collect()))
     assert(jobsAbove > 1, s"the above-limit path ran only $jobsAbove jobs")
+  }
+
+  /** `n` rows of the pages fixture under fresh keys, as a local relation
+    * in the column order of `table` (reading it runs no Spark job).
+    */
+  private def localInsertView(table: String, view: String, prefix: String, n: Int): Unit = {
+    val cols = spark.table(table).schema.fieldNames.toSeq
+    val src = pagesDf.orderBy("url").limit(n)
+      .withColumn("key", concat(lit(prefix), col("url")))
+      .select(cols.map(col): _*)
+    spark.createDataFrame(java.util.Arrays.asList(src.collect(): _*), src.schema)
+      .createOrReplaceTempView(view)
+  }
+
+  test("a writeChunks batch and a SQL INSERT each run exactly one Spark job") {
+    val root = freshRoot()
+    val io = new ParquetTableIO(root)
+    val src = pagesDf.repartition(4).localCheckpoint()
+    val enc = EncodePipeline.encodeColumnsLocal(src, col("url"), pageSpecs, 8L << 10)
+    assert(enc.rdd.getNumPartitions == 4)
+    val writeJobs = jobsOf(io.writeChunks(enc, "pages"))
+    assert(writeJobs == 1, s"writeChunks ran $writeJobs Spark jobs; encode and write are one")
+    val cat = catalogOn(root, "fsst_writejobs")
+    def count(): Long = spark.sql(s"SELECT count(*) FROM $cat.pages").collect()(0).getLong(0)
+    val n = count()
+    assert(n == pagesDf.count())
+    localInsertView(s"$cat.pages", "fsst_insert64", "ins-", 64)
+    val insertJobs = jobsOf(spark.sql(s"INSERT INTO $cat.pages SELECT * FROM fsst_insert64").collect())
+    assert(insertJobs == 1, s"a 64-row INSERT ran $insertJobs Spark jobs; the write job is the one")
+    assert(count() == n + 64)
+  }
+
+  test("repairManifest rebuilds the rows writeChunks and SQL INSERT recorded") {
+    val root = freshRoot()
+    val io = writeTable(pagesDf, root, "pages", 8L << 10)
+    val cat = catalogOn(root, "fsst_repair")
+    localInsertView(s"$cat.pages", "fsst_insert_repair", "ins-", 64)
+    spark.sql(s"INSERT INTO $cat.pages SELECT * FROM fsst_insert_repair")
+    assert(io.committedBatchIds(spark, "pages").length == 2)
+    def rows(): Seq[String] = io.manifest(spark, "pages").collect().map(_.mkString("|")).sorted.toSeq
+    val written = rows()
+    assert(written.length == io.readChunks(spark, "pages").count())
+    io.repairManifest(spark, "pages")
+    val repaired = rows()
+    val changed = written.diff(repaired)
+    assert(changed.isEmpty && repaired.size == written.size,
+      s"repair changed ${changed.size} of ${written.size} manifest rows, " +
+        s"e.g. ${changed.headOption} -> ${repaired.diff(written).headOption}")
   }
 
   test("a single-key SQL DELETE runs no more Spark jobs than a single-key UPDATE") {
