@@ -255,64 +255,14 @@ final class FsstEncoder(table: SymbolTable) {
     java.util.Arrays.copyOf(dst, n)
   }
 
-  // A/B experiment flag (tools.KernelAB): dispatches to the split-loop
-  // variant. MEASURED AND REJECTED (same-JVM interleaved A/B, 8 rounds ×
-  // best-of-15, three corpora): split is consistently −7% vs base —
-  // hoisting the window-boundary checks buys nothing (they are perfectly
-  // predicted) and the duplicated loop body costs C2 more than the checks
-  // did. Base kernel in the same quiet window: 212 (mobydick) / 289 (hdfs
-  // logs) / 312 (art_of_war) MB/s — inside the reference 200–500 band.
-  // The variant stays, default-off and output-identical (asserted by
-  // KernelAB), so the measurement is reproducible.
-  private[fsstspark] var useSplitKernel = false
-
   /** Hot loop. Match order: learned-2-byte fast path → 3..8-byte hash probe
     * (masked compare; one slot per index by construction) → packed
     * shortCodes fallback (2-byte learned / 1-byte learned / escape).
     * Requires every load position p in [from,to) to satisfy p+8 ≤ src.length.
+    * The window checks stay inline: hoisting them into a separate
+    * check-free loop measured −7% (BASELINE.md r3).
     */
-  private def encodeChunk(src: Array[Byte], from: Int, to: Int, dst: Array[Byte], dstPos0: Int): Int =
-    if (useSplitKernel) encodeChunkSplit(src, from, to, dst, dstPos0)
-    else encodeChunkBase(src, from, to, dst, dstPos0)
-
-  /** Split-loop variant: for pos ≤ to-8, EVERY possible match (len ≤ 8)
-    * satisfies pos+len ≤ to automatically, so the three window-boundary
-    * checks vanish from the main loop; the final ≤8 positions of each
-    * 511-byte window run the fully-checked base loop. Greedy decisions are
-    * identical at every position → byte-identical output (asserted by
-    * KernelAB on every corpus).
-    */
-  private def encodeChunkSplit(src: Array[Byte], from: Int, to: Int, dst: Array[Byte], dstPos0: Int): Int = {
-    var pos = from
-    var out = dstPos0
-    val safe = to - 8
-    val lim0 = lim
-    val shortCodes = this.shortCodes
-    val byteCodes = this.byteCodes
-    val hashIcl = this.hashIcl
-    val hashVal = this.hashVal
-    val hashMask = this.hashMask
-    while (pos <= safe) {
-      val word = Bytes.getLongLE(src, pos)
-      val code: Int = shortCodes((word & 0xffff).toInt)
-      if ((code & 0xff) < lim0) {
-        Bytes.putByte(dst, out, code.toByte); out += 1; pos += 2
-      } else {
-        val idx = (hash(word & 0xffffff) & (HashTabSize - 1)).toInt
-        val icl = hashIcl(idx)
-        if (icl < IclFree && hashVal(idx) == (word & hashMask(idx))) {
-          Bytes.putByte(dst, out, (icl >>> 16).toByte); out += 1; pos += (icl >>> 28).toInt
-        } else {
-          Bytes.putByte(dst, out, code.toByte); out += 1
-          if ((code & CodeBase) != 0) { Bytes.putByte(dst, out, word.toByte); out += 1 }
-          pos += (code >>> LenBits)
-        }
-      }
-    }
-    encodeChunkBase(src, pos, to, dst, out)
-  }
-
-  private def encodeChunkBase(src: Array[Byte], from: Int, to: Int, dst: Array[Byte], dstPos0: Int): Int = {
+  private def encodeChunk(src: Array[Byte], from: Int, to: Int, dst: Array[Byte], dstPos0: Int): Int = {
     var pos = from
     var out = dstPos0
     val lim0 = lim

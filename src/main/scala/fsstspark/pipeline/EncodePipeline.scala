@@ -92,12 +92,6 @@ object EncodePipeline {
     require(n <= MaxChunkRows,
       s"chunk $cid holds $n rows > $MaxChunkRows — raise nChunks (hash mode) or lower targetChunkBytes")
 
-  /** Map-side pre-grouping flush threshold: a map task emits a chunk's
-    * packed block once it reaches this size, so per-chunk builder memory is
-    * bounded and the shuffle still carries few, large blocks.
-    */
-  final val PregroupFlushBytes: Int = 4 << 20
-
   /** Encode a string/binary column given as keyed values. `chunkId` must be
     * a deterministic pure function of `key` (e.g. [[chunkIdByHash]], or
     * `pmod(col("key").cast("long"), n)` when keys are numeric and the
@@ -107,18 +101,8 @@ object EncodePipeline {
     * is pure Tungsten (scan → UnsafeRow → shuffle write, zero JVM objects
     * per row), the reduce stage radix-sorts on the single long chunk_id
     * and streams one buffered chunk at a time into the encode kernel. A
-    * map-side combiner variant that packs each task's rows into per-chunk
-    * byte blocks before the exchange ([[encodeBytesPregrouped]]) was
-    * built for round 4 and MEASURED AGAINST THIS SHAPE same-JVM,
-    * same-window: the row shape won at BOTH scales (313 MB: 1.00 s vs
-    * 1.42 s; 15.2 GB: 21.5 s vs 42.0 s best-of-3, lower GC) — on a
-    * single-node tmpfs exchange Tungsten row serialization is already a
-    * memcpy, and the combiner's three extra full-data copies (pack,
-    * block-materialize, unpack) plus map-side row deserialization cost
-    * more than the per-row shuffle overhead they save. The variant stays
-    * in-tree, default-off, so the measurement is reproducible
-    * (BASELINE.md round-4 shuffle A/B; cf. the round-3 kernel-variant
-    * rejection).
+    * map-side combiner packing each chunk's rows into byte blocks lost to
+    * this shape at both measured scales (BASELINE.md round-4 shuffle A/B).
     */
   def encodeBytes(
       ds: Dataset[KV],
@@ -141,67 +125,6 @@ object EncodePipeline {
       .sortWithinPartitions("chunk_id")
       .mapPartitions { it =>
         groupByChunkRows(it).map { case (cid, keys, values) =>
-          sortByKey(keys, values)
-          mkResult(cid, column, keys, values)
-        }
-      }
-  }
-
-  /** The round-4 map-side-combiner variant of [[encodeBytes]] — kept
-    * DEFAULT-OFF for reproducible A/B measurement only (it lost to the
-    * row shape at both measured scales on this host; see [[encodeBytes]]
-    * docs + BASELINE.md). Output is bit-identical to [[encodeBytes]].
-    */
-  def encodeBytesPregrouped(
-      ds: Dataset[KV],
-      column: String,
-      chunkId: Column
-  ): Dataset[ChunkResult] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    // Explicit partition count: without it AQE coalesces the exchange to
-    // ~64MB partitions, capping the reduce stage (sort + train + encode —
-    // the CPU-heavy part) at a handful of tasks regardless of cores. 2×
-    // the configured count: reduce tasks are chunk-grained and sit behind
-    // the map-stage barrier, so two shorter waves hide stragglers that a
-    // single wave of bigger tasks exposes as wall-clock.
-    val parts = 2 * ds.sparkSession.sessionState.conf.numShufflePartitions
-    // keys travel as BINARY (UTF8String bytes copied straight out of the
-    // scan) — materializing java.lang.String per row on the map side was
-    // measurable GC load at 15 GB; the reduce side builds each key String
-    // exactly once.
-    ds.select(chunkId.cast("long").as("chunk_id"),
-        col("key").cast("binary").as("key"), col("value"))
-      .as[(Long, Array[Byte], Array[Byte])]
-      .mapPartitions { it =>
-        packBlocks[(Long, Array[Byte], Array[Byte])](it, _._1, (row, b) => {
-          val k = row._2
-          b.addVarInt(k.length)
-          b.addBytes(k)
-          val v = row._3
-          if (v == null) b.addVarInt(0) else { b.addVarInt(v.length + 1); b.addBytes(v) }
-        })
-      }
-      .toDF("chunk_id", "n", "block")
-      .repartition(parts, col("chunk_id"))
-      .sortWithinPartitions("chunk_id")
-      .as[(Long, Int, Array[Byte])]
-      .mapPartitions { blocks =>
-        groupPacked(blocks).map { case (cid, n, bs) =>
-          checkChunkRows(n, cid)
-          val keys = new Array[String](n)
-          val values = new Array[Array[Byte]](n)
-          var i = 0
-          bs.foreach { block =>
-            val r = new fsstspark.util.ByteReader(block)
-            while (r.remaining > 0) {
-              keys(i) = readKey(r)
-              val l = r.readVarInt()
-              if (l > 0) values(i) = r.readBytes(l - 1)
-              i += 1
-            }
-          }
-          require(i == n, s"chunk $cid: packed blocks held $i rows, expected $n")
           sortByKey(keys, values)
           mkResult(cid, column, keys, values)
         }
@@ -715,85 +638,6 @@ object EncodePipeline {
         }
         rows.toArray
       }
-    }
-
-  // --------------------------------------------- map-side pre-grouping
-  // The shuffle-chunked paths' combiner layer: rows destined for the same
-  // chunk pack into one growing byte block per (map task, chunk); a block
-  // flushes downstream once it reaches PregroupFlushBytes, so map memory is
-  // bounded by min(packed partition bytes, touched-chunks × flush size) and
-  // the exchange carries large binary blocks instead of per-row records.
-
-  private final class BlockBuf {
-    // 16 KB start: blocks at wide chunk fan-out land in the 10s-of-KB
-    // range, and doubling up from 1 KB re-copied every small block ~4×
-    val b = new fsstspark.util.ByteArrayBuilder(16 * 1024)
-    var n = 0
-  }
-
-  @inline private def readKey(r: fsstspark.util.ByteReader): String = {
-    val l = r.readVarInt()
-    require(l >= 0 && r.pos + l <= r.buf.length, s"corrupt packed block: key length $l")
-    val s = new String(r.buf, r.pos, l, java.nio.charset.StandardCharsets.UTF_8)
-    r.pos += l
-    s
-  }
-
-  /** Streaming packer: consumes `in`, appending each row (via `writeRow`)
-    * to its chunk's block; yields (chunk_id, nRows, block) as blocks fill,
-    * then drains the partial blocks at end of input.
-    */
-  private def packBlocks[T](
-      in: Iterator[T],
-      cidOf: T => Long,
-      writeRow: (T, fsstspark.util.ByteArrayBuilder) => Unit
-  ): Iterator[(Long, Int, Array[Byte])] =
-    new Iterator[(Long, Int, Array[Byte])] {
-      private val bufs = new java.util.HashMap[java.lang.Long, BlockBuf]()
-      private var pending: (Long, Int, Array[Byte]) = _
-      private var drain: java.util.Iterator[java.util.Map.Entry[java.lang.Long, BlockBuf]] = _
-
-      private def advance(): Unit = {
-        while (pending == null && in.hasNext) {
-          val row = in.next()
-          val cid = java.lang.Long.valueOf(cidOf(row))
-          var bb = bufs.get(cid)
-          if (bb == null) { bb = new BlockBuf; bufs.put(cid, bb) }
-          writeRow(row, bb.b)
-          bb.n += 1
-          if (bb.b.length >= PregroupFlushBytes) {
-            pending = (cid.longValue(), bb.n, bb.b.result())
-            bufs.remove(cid)
-          }
-        }
-        if (pending == null) {
-          if (drain == null) drain = bufs.entrySet().iterator()
-          while (pending == null && drain.hasNext) {
-            val e = drain.next()
-            if (e.getValue.n > 0) pending = (e.getKey.longValue(), e.getValue.n, e.getValue.b.result())
-          }
-        }
-      }
-
-      def hasNext: Boolean = { advance(); pending != null }
-      def next(): (Long, Int, Array[Byte]) = {
-        advance()
-        val r = pending
-        pending = null
-        r
-      }
-    }
-
-  /** Streams (chunk_id, n, block) rows sorted by chunk_id into one chunk's
-    * block list at a time, with the summed row count.
-    */
-  private def groupPacked(
-      it: Iterator[(Long, Int, Array[Byte])]
-  ): Iterator[(Long, Int, Seq[Array[Byte]])] =
-    groupRuns(it, (r: (Long, Int, Array[Byte])) => r._1) { (cid, buf) =>
-      val n = buf.foldLeft(0L)(_ + _._2)
-      require(n <= Int.MaxValue, s"chunk $cid: $n rows overflow")
-      (cid, n.toInt, buf.map(_._3).toSeq)
     }
 
   /** One column of a multi-column decode pass: the stored type to surface

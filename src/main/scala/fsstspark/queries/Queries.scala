@@ -496,7 +496,8 @@ object Queries {
       .orderBy("query_id")
   }
 
-  // Thresholds from tools/AnnProbe across sf0.001/0.01/0.1: worst-case
+  // Thresholds from a one-off recall probe across sf0.001/0.01/0.1 (the
+  // probe is gone; its source is in git history at a074797): worst-case
   // hits@10 are 6 (LSH, 32 tables) and 8 (IVF, 24/32 probes) — the
   // asserted minima keep a ≥2-hit margin while still failing hard on any
   // bucketing/probing regression. (The sf embeddings are near-uniform —

@@ -72,7 +72,7 @@ final class FsstCatalog extends TableCatalog {
     m.put("root", root)
     m.put("table", table)
     // per-table option passthrough: spark.sql.catalog.<cat>.<opt>.<table>
-    Seq("stringColumns", "chunksPerPartition", "columnar").foreach { opt =>
+    Seq("stringColumns", "chunksPerPartition").foreach { opt =>
       Option(options.get(s"$opt.$table")).foreach(v => m.put(opt, v))
     }
     asOf.foreach(m.put("asOf", _))
@@ -115,7 +115,7 @@ final class FsstCatalog extends TableCatalog {
     try FsstDataSource.resolve(tableOptions(ident.name, asOf))
     catch {
       // only genuine "table/snapshot missing" becomes NoSuchTable — a bad
-      // option value (columnar=on, non-numeric chunksPerPartition, a
+      // option value (non-numeric or zero chunksPerPartition, a
       // non-committed VERSION AS OF) must surface as the config error it is
       case e: IllegalArgumentException
           if e.getMessage != null && e.getMessage.contains("no committed chunks") =>

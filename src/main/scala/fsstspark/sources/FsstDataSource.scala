@@ -92,7 +92,7 @@ final class FsstDataSource extends TableProvider with DataSourceRegister {
     val opts = new CaseInsensitiveStringMap(properties)
     if (schema != null && schema.nonEmpty) {
       val o = FsstDataSource.parseOptions(opts)
-      new FsstTable(o.root, o.table, schema, o.chunksPerPartition, o.columnar, o.asOf,
+      new FsstTable(o.root, o.table, schema, o.chunksPerPartition, o.asOf,
         FsstCatalog.readColumnSince(SparkSession.active, o.root, o.table))
     } else FsstDataSource.resolve(opts)
   }
@@ -111,8 +111,7 @@ object FsstDataSource {
     * snapshot (a batch id — what SQL `VERSION AS OF` resolves to).
     */
   private[sources] final case class FsstOptions(root: String, table: String,
-      stringCols: Set[String], chunksPerPartition: Int, columnar: String,
-      asOf: Option[String])
+      stringCols: Set[String], chunksPerPartition: Int, asOf: Option[String])
 
   private[sources] def parseOptions(options: CaseInsensitiveStringMap): FsstOptions = {
     val path = Option(options.get("path"))
@@ -129,17 +128,7 @@ object FsstDataSource {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
     val chunksPerPartition = Option(options.get("chunksPerPartition")).map(_.toInt).getOrElse(8)
     require(chunksPerPartition > 0, "chunksPerPartition must be positive")
-    // columnar=off (default, MEASURED): vectors lose 2-3x on byte-heavy
-    // scans (putByteArray copies multi-KB values the row path passes
-    // zero-copy), lose ~1.5x on small mixed chunks (per-batch overhead),
-    // and only TIE on the best case (1M-row longs-only chunks — decode,
-    // not row materialization, bounds the scan). BASELINE.md r4b. The
-    // reader stays in-tree: auto = fixed-width projections only, all =
-    // every data scan.
-    val columnar = Option(options.get("columnar")).getOrElse("off")
-    require(Set("auto", "off", "all")(columnar), s"columnar must be auto|off|all, got '$columnar'")
-    FsstOptions(root, table, stringCols, chunksPerPartition, columnar,
-      Option(options.get("asOf")))
+    FsstOptions(root, table, stringCols, chunksPerPartition, Option(options.get("asOf")))
   }
 
   def resolve(options: CaseInsensitiveStringMap): FsstTable = {
@@ -168,7 +157,7 @@ object FsstDataSource {
         // a snapshot predating an added column's watermark reads it as
         // all-null (the chunks in scope all null-pad) — Iceberg's
         // read-with-current-schema time-travel semantics
-        return new FsstTable(root, table, declared, o.chunksPerPartition, o.columnar, o.asOf,
+        return new FsstTable(root, table, declared, o.chunksPerPartition, o.asOf,
           columnSince)
       case None =>
     }
@@ -230,14 +219,14 @@ object FsstDataSource {
     // first, then the schema), but a manifest carrying every column
     // PLUS a stray watermark must still null-pad correctly rather than
     // hard-fail on pre-evolution batches
-    new FsstTable(root, table, StructType(fields), o.chunksPerPartition, o.columnar, o.asOf,
+    new FsstTable(root, table, StructType(fields), o.chunksPerPartition, o.asOf,
       columnSince)
   }
 }
 
 final class FsstTable(root: String, tableName: String, tableSchema: StructType,
-    chunksPerPartition: Int, columnarMode: String = "off",
-    asOf: Option[String] = None, columnSince: Map[String, String] = Map.empty)
+    chunksPerPartition: Int, asOf: Option[String] = None,
+    columnSince: Map[String, String] = Map.empty)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -272,8 +261,7 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FsstScanBuilder(root, tableName, tableSchema, chunksPerPartition, columnarMode, asOf,
-      columnSince)
+    new FsstScanBuilder(root, tableName, tableSchema, chunksPerPartition, asOf, columnSince)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo):
       org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -357,8 +345,8 @@ private[sources] final case class MinMaxSpec(column: String, isMin: Boolean,
     dataType: DataType) extends AggSpec
 
 final class FsstScanBuilder(root: String, table: String, tableSchema: StructType,
-    chunksPerPartition: Int, columnarMode: String = "off",
-    asOf: Option[String] = None, columnSince: Map[String, String] = Map.empty,
+    chunksPerPartition: Int, asOf: Option[String] = None,
+    columnSince: Map[String, String] = Map.empty,
     rowLevel: Option[FsstRowLevelOperation] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
@@ -495,7 +483,7 @@ final class FsstScanBuilder(root: String, table: String, tableSchema: StructType
 
   override def build(): Scan =
     new FsstScan(root, table, tableSchema, required, pushed, chunksPerPartition, () => view,
-      agg, columnarMode, asOf, columnSince, rowLevel)
+      agg, asOf, columnSince, rowLevel)
 }
 
 /** One fetched column of a partition: every chunk in the group has its
@@ -524,7 +512,7 @@ final case class AggRowPartition(values: Array[Any]) extends InputPartition
 final class FsstScan(root: String, table: String, tableSchema: StructType,
     required: StructType, filters: Array[Filter], chunksPerPartition: Int,
     manifestView: () => ManifestView,
-    agg: Option[(StructType, Array[AggSpec])] = None, columnarMode: String = "off",
+    agg: Option[(StructType, Array[AggSpec])] = None,
     asOf: Option[String] = None, columnSince: Map[String, String] = Map.empty,
     rowLevel: Option[FsstRowLevelOperation] = None)
     extends Scan with Batch with SupportsReportStatistics
@@ -796,7 +784,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     // rewrite would then delete. Filters prune groups only.
     val eq = if (rowLevel.isDefined) Array.empty[ColEquals]
       else FsstScan.byteEqFilters(filters, tableSchema)
-    new FsstReaderFactory(readSchema(), conf, eq, columnarMode)
+    new FsstReaderFactory(readSchema(), conf, eq)
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -811,7 +799,7 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     require(asOf.isEmpty,
       "a snapshot-pinned fsst table cannot be streamed — the pin freezes the commit log")
     new FsstMicroBatchStream(root, table, tableSchema, required, filters, chunksPerPartition,
-      columnarMode, columnSince)
+      columnSince)
   }
 }
 
@@ -849,7 +837,7 @@ final case class FsstOffset(batch: String)
   */
 final class FsstMicroBatchStream(root: String, table: String, tableSchema: StructType,
     required: StructType, filters: Array[Filter], chunksPerPartition: Int,
-    columnarMode: String = "off", columnSince: Map[String, String] = Map.empty)
+    columnSince: Map[String, String] = Map.empty)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -900,9 +888,8 @@ final class FsstMicroBatchStream(root: String, table: String, tableSchema: Struc
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    // same eq-pushdown + columnar policy as the batch scan
-    new FsstReaderFactory(required, conf, FsstScan.byteEqFilters(filters, tableSchema),
-      columnarMode)
+    // same eq-pushdown as the batch scan
+    new FsstReaderFactory(required, conf, FsstScan.byteEqFilters(filters, tableSchema))
   }
 }
 
@@ -1631,7 +1618,7 @@ private[sources] object FsstScan {
 final case class ColEquals(column: String, targets: Array[Array[Byte]])
 
 final class FsstReaderFactory(schema: StructType, conf: SerializableConfiguration,
-    eqFilters: Array[ColEquals] = Array.empty, columnarMode: String = "off")
+    eqFilters: Array[ColEquals] = Array.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -1646,36 +1633,10 @@ final class FsstReaderFactory(schema: StructType, conf: SerializableConfiguratio
       }
       case p: ChunkGroupPartition => new ChunkGroupReader(schema, p, conf.value, eqFilters)
     }
-
-  /** Columnar reads are OPT-IN (`columnar=auto|all`): measured on three
-    * shapes, the row path wins byte-heavy scans 2–3× (putByteArray
-    * copies what rows pass zero-copy), wins small mixed chunks ~1.5×
-    * (per-batch overhead), and ties the longs-only best case — decode,
-    * not row materialization, bounds the scan (BASELINE.md r4b).
-    * `auto` = fixed-width-only projections; `all` = every data scan.
-    * Uniform across a scan's partitions by construction: aggregate scans
-    * (single AggRowPartition) and empty projections stay row-based.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition match {
-      case p: ChunkGroupPartition if p.colFiles.nonEmpty && schema.nonEmpty =>
-        columnarMode match {
-          case "off" => false
-          case "all" => true
-          case _ => schema.fields.forall(f =>
-            f.dataType == LongType || f.dataType == DoubleType)
-        }
-      case _ => false
-    }
-
-  override def createColumnarReader(partition: InputPartition):
-      PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ChunkGroupColumnarReader(schema, partition.asInstanceOf[ChunkGroupPartition],
-      conf.value, eqFilters)
 }
 
-/** One decoded (and eq-filtered) chunk, shared by the row and columnar
-  * emitters: `emit` = row indices to surface, arrays indexed by the
+/** One decoded (and eq-filtered) chunk, as the row reader emits it:
+  * `emit` = row indices to surface, arrays indexed by the
   * partition's colFiles order (an entry is null when that column is
   * eq-answered or of the other kind).
   */
@@ -1897,75 +1858,4 @@ final class ChunkGroupReader(schema: StructType, part: ChunkGroupPartition,
   }
   override def get(): InternalRow = current
   override def close(): Unit = ()
-}
-
-/** Columnar emitter: each decoded chunk becomes ONE ColumnarBatch filled
-  * straight from the decoder's per-column arrays (they are already
-  * columnar), so the scan avoids a GenericInternalRow per row and Spark's
-  * codegen'd ColumnarToRow takes over — the connector's hot path stays
-  * inside whole-stage codegen.
-  */
-final class ChunkGroupColumnarReader(schema: StructType, part: ChunkGroupPartition,
-    conf: Configuration, eqFilters: Array[ColEquals])
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  private val fields = schema.fields
-  private val dec = new ChunkGroupDecoder(schema, part, conf, eqFilters)
-  private val chunks: Iterator[DecodedChunk] =
-    if (part.colFiles.isEmpty) Iterator.empty else dec.decodedChunks()
-  private var current: ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (current != null) { current.close(); current = null }
-    if (!chunks.hasNext) return false
-    val d = chunks.next()
-    val m = d.emitCount
-    val vectors = fields.map { f =>
-      val v = new OnHeapColumnVector(m, f.dataType)
-      var j = 0
-      if (f.name == FsstScan.ChunkIdCol) {
-        v.putLongs(0, m, d.cid)
-      } else if (f.name == "key") {
-        while (j < m) { val b = d.keys(d.rowAt(j)); v.putByteArray(j, b, 0, b.length); j += 1 }
-      } else if (d.eqTargets.containsKey(f.name)) {
-        val perIdx = d.eqTargets.get(f.name)
-        while (j < m) {
-          val t = perIdx.get(d.rowAt(j))
-          v.putByteArray(j, t, 0, t.length); j += 1
-        }
-      } else dec.colOf.get(f.name) match {
-        case None => // column absent here (added after this batch): all-null
-          while (j < m) { v.putNull(j); j += 1 }
-        case Some(i) =>
-          f.dataType match {
-            case LongType =>
-              val c = d.longCols(i)
-              while (j < m) {
-                val ri = d.rowAt(j)
-                if (c.nulls(ri)) v.putNull(j) else v.putLong(j, c.values(ri)); j += 1
-              }
-            case DoubleType =>
-              val c = d.longCols(i)
-              while (j < m) {
-                val ri = d.rowAt(j)
-                if (c.nulls(ri)) v.putNull(j)
-                else v.putDouble(j, java.lang.Double.longBitsToDouble(c.values(ri))); j += 1
-              }
-            case _ => // StringType and BinaryType both store byte arrays
-              val col = d.bytesCols(i)
-              while (j < m) {
-                val b = col(d.rowAt(j))
-                if (b == null) v.putNull(j) else v.putByteArray(j, b, 0, b.length); j += 1
-              }
-          }
-      }
-      v
-    }
-    current = new ColumnarBatch(vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector], m)
-    true
-  }
-  override def get(): ColumnarBatch = current
-  override def close(): Unit = if (current != null) { current.close(); current = null }
 }

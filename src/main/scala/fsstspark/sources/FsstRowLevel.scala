@@ -80,8 +80,8 @@ final class FsstRowLevelOperation(root: String, table: String, tableSchema: Stru
     Array(org.apache.spark.sql.connector.expressions.Expressions.column(FsstScan.ChunkIdCol))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FsstScanBuilder(root, table, tableSchema, chunksPerPartition, "off", None,
-      columnSince, rowLevel = Some(this))
+    new FsstScanBuilder(root, table, tableSchema, chunksPerPartition, None, columnSince,
+      rowLevel = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val ws = info.schema()

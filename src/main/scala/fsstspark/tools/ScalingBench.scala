@@ -55,9 +55,9 @@ object ScalingBench {
     // encoded catalog shared by the read modes (dsv2 connector vs typed
     // decodeColumns): built once from the same corpus
     val catalogRoot = corpusDir + "_catalog_v2"
-    // pages catalog only for the modes that read it — a longonly-only run
-    // must not pay the full corpus encode
-    val readModes = Set("dsv2", "dsv2_typed", "dsv2_long", "dsv2_long_rows", "dsv2_write", "pipeline_write")
+    // pages catalog only for the modes that read it — a scan/encode-only
+    // run must not pay the full corpus encode
+    val readModes = Set("dsv2", "dsv2_typed", "dsv2_long", "dsv2_write", "pipeline_write")
     if (wantModes.exists(readModes) &&
         !new java.io.File(s"$catalogRoot/pages/commits").exists()) {
       val spark = SparkSession.builder().master("local[32]")
@@ -75,27 +75,6 @@ object ScalingBench {
       spark.stop()
       println(s"[scaling] catalog written: $catalogRoot")
     }
-    // longs-only catalog: ~1M rows per chunk — the columnar reader's best
-    // case (vector fills amortized over big batches, no byte columns)
-    if (wantModes.exists(Set("dsv2_longonly", "dsv2_longonly_rows")) &&
-        !new java.io.File(s"$catalogRoot/longs/commits").exists()) {
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("fsstspark-longcat-gen")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      import spark.implicits._
-      spark.sparkContext.setLogLevel("ERROR")
-      val n = 20000000L
-      val kv = spark.range(0, n, 1, 32).select(
-        concat(lit("k"), lpad(col("id").cast("string"), 10, "0")).as("key"),
-        (col("id") * 2654435761L % 1000003L).as("value")).as[fsstspark.pipeline.LongKV]
-      val io = new fsstspark.io.ParquetTableIO(catalogRoot)
-      io.writeChunks(EncodePipeline.encodeLongs(kv, "v",
-        expr("cast(substring(key, 2, 10) as bigint) div 1000000")), "longs")
-      spark.stop()
-      println(s"[scaling] longs catalog written: $catalogRoot/longs")
-    }
-
     val out = scala.collection.mutable.LinkedHashMap.empty[(Int, String), (Double, Long)]
     for (cpus <- cpuLevels) {
       val spark = SparkSession.builder()
@@ -141,11 +120,6 @@ object ScalingBench {
             .agg(sum("bytes_in")).head().getLong(0) +
           EncodePipeline.encodeBytes(htmlKv, "html", chunk)
             .agg(sum("bytes_in")).head().getLong(0)),
-        "shuffle_pregroup" -> (() => // round-4 combiner variant, measured & rejected
-          EncodePipeline.encodeBytesPregrouped(textKv, "text", chunk)
-            .agg(sum("bytes_in")).head().getLong(0) +
-          EncodePipeline.encodeBytesPregrouped(htmlKv, "html", chunk)
-            .agg(sum("bytes_in")).head().getLong(0)),
         // full-table decode through the DataSource V2 connector (reported
         // bytes = decoded output, the read-side throughput denominator)
         "dsv2" -> (() =>
@@ -161,18 +135,11 @@ object ScalingBench {
             Seq(EncodePipeline.ReadSpec("text"), EncodePipeline.ReadSpec("html")))
             .agg(sum(octet_length(col("text"))) + sum(octet_length(col("html"))))
             .head().getLong(0)),
-        // long-column scan through the connector, columnar (explicit auto —
-        // the DEFAULT is off after this A/B) vs rows — sum() is NOT a
-        // pushed aggregate, so the scan carries every value; bytes = 8/row
+        // long-column scan through the connector — sum() is NOT a pushed
+        // aggregate, so the scan carries every value; bytes = 8/row
         "dsv2_long" -> (() => // % keeps the 200k-row sum inside a long
           8L * spark.read.format("fsst")
-            .option("root", catalogRoot).option("table", "pages")
-            .option("columnar", "auto").load()
-            .groupBy().agg(sum(col("ts") % 1000000L), count(col("ts"))).head().getLong(1)),
-        "dsv2_long_rows" -> (() =>
-          8L * spark.read.format("fsst")
-            .option("root", catalogRoot).option("table", "pages")
-            .option("columnar", "off").load()
+            .option("root", catalogRoot).option("table", "pages").load()
             .groupBy().agg(sum(col("ts") % 1000000L), count(col("ts"))).head().getLong(1)),
         // DSv2 WRITE path: writeTo().append() the whole corpus into a fresh
         // catalog table (per-task encode + executor-written chunk files +
@@ -215,18 +182,7 @@ object ScalingBench {
           val p = new org.apache.hadoop.fs.Path(wroot)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
           corpusWriteBytes
-        }),
-        // longs-only catalog (1M rows/chunk): columnar's best case
-        "dsv2_longonly" -> (() =>
-          8L * spark.read.format("fsst")
-            .option("root", catalogRoot).option("table", "longs")
-            .option("columnar", "auto").load()
-            .groupBy().agg(sum(col("v")), count(col("v"))).head().getLong(1)),
-        "dsv2_longonly_rows" -> (() =>
-          8L * spark.read.format("fsst")
-            .option("root", catalogRoot).option("table", "longs")
-            .option("columnar", "off").load()
-            .groupBy().agg(sum(col("v")), count(col("v"))).head().getLong(1))
+        })
       )
       for ((mode, runOnce) <- modes if wantModes(mode)) {
         val bytesIn = runOnce() // warmup, untimed
@@ -257,9 +213,7 @@ object ScalingBench {
     }
     val cs = cpuLevels.sorted
     if (cs.length >= 2) {
-      for (mode <- Seq("scan", "local", "shuffle", "shuffle_pregroup", "dsv2", "dsv2_typed",
-          "dsv2_long", "dsv2_long_rows", "dsv2_longonly", "dsv2_longonly_rows",
-          "dsv2_write", "pipeline_write") if wantModes(mode)) {
+      for (mode <- out.keysIterator.map(_._2).toSeq.distinct) {
         val (tLow, _) = out((cs.head, mode))
         val (tHigh, bytes) = out((cs.last, mode))
         val factor = cs.last.toDouble / cs.head

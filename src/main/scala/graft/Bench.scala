@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Driver-run benchmark: one JSON line with per-query seconds plus the
   * headline pages-corpus encode/decode throughput (the north-rule metric:
-  * GB/s over Common-Crawl-style pages).
+  * GB/s over Common-Crawl-style pages), then one compact JSON line with
+  * the total, the headlines, the ratio and the host-control fields.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -193,6 +194,13 @@ object Bench {
         s""""encode_shuffle_gbps":${num(3, encShuffleGbps)},"decode_gbps":${num(3, decGbps)},""" +
         s""""host_kernel_enc_mbps":${num(1, hostEncMbps)},"host_kernel_dec_mbps":${num(1, hostDecMbps)},""" +
         s""""headline_reps":{"local_sec":${repArr(localReps)},"shuffle_sec":${repArr(shuffleReps)},"decode_sec":${repArr(decodeReps)}}}""")
+    // compact summary (< 512 B) after the full line, for log readers that
+    // keep only the tail of the output
+    println(
+      s"""{"metric":"total","value":$total,"unit":"sec","encode_gbps":${num(3, encGbps)},""" +
+        s""""encode_shuffle_gbps":${num(3, encShuffleGbps)},"decode_gbps":${num(3, decGbps)},""" +
+        s""""pages_ratio":${num(4, ratio)},"cpus":$cpus,""" +
+        s""""host_kernel_enc_mbps":${num(1, hostEncMbps)},"host_kernel_dec_mbps":${num(1, hostDecMbps)}}""")
     spark.stop()
   }
 }

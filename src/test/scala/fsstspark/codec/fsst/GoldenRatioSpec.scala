@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Golden compressed-size ceilings per reference corpus (BASELINE.md).
+/** Golden compressed-size ceilings per reference corpus (BASELINE.md) and
+  * per in-repo corpus ([[TestCorpora]]).
   *
   * The Go reference can't run in this sandbox, so per SURVEY.md §5 the
   * committed ceilings are our encoder's measured output (same algorithm,
@@ -38,6 +39,36 @@ class GoldenRatioSpec extends AnyFunSuite {
       val ratio = out.toDouble / math.max(in, 1)
       assert(ratio <= ceiling * 1.02, f"ratio $ratio%.4f exceeds golden $ceiling%.4f")
       assert(ratio >= 0.1, "suspiciously good — check the measurement")
+    }
+  }
+
+  // in-repo corpus → (golden ratio, serialized-table bytes), measured
+  // 2026-10-19 the same way (line-split, excl. table). These pin TODAY'S
+  // encoder output, not a reference figure: they guard every host, with
+  // or without the reference files, against a ratio or table-format
+  // regression. Same bands as above: ratio +2%, table size ±15%.
+  private val inRepoGolden = Map(
+    "prose" -> (0.4360, 671),
+    "apache_log" -> (0.3362, 715),
+    "hdfs_log" -> (0.3936, 671),
+    "urls" -> (0.4113, 762),
+    "mixed_text" -> (0.5746, 514)
+  )
+
+  for ((name, corpus) <- TestCorpora.all; (ceiling, size) = inRepoGolden(name)) {
+    test(s"in-repo corpus $name compresses to ≤ $ceiling (+2% slack), table $size B ±15%") {
+      val values = corpus.map(_.getBytes(UTF_8))
+      val table = FsstTrainer.train(values)
+      val enc = table.newEncoder()
+      var in = 0L
+      var out = 0L
+      values.foreach { v => in += v.length; out += enc.encodeAll(v).length }
+      val ratio = out.toDouble / math.max(in, 1)
+      assert(ratio <= ceiling * 1.02, f"ratio $ratio%.4f exceeds golden $ceiling%.4f")
+      assert(ratio >= 0.1, "suspiciously good — check the measurement")
+      val b = table.serialize()
+      assert(b.length >= (size * 0.85).toInt && b.length <= (size * 1.15).toInt,
+        s"$name: serialized table ${b.length} B outside golden $size B ±15%")
     }
   }
 

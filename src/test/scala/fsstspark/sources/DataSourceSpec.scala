@@ -347,36 +347,16 @@ class DataSourceSpec extends AnyFunSuite {
     assert(n2 == df.filter(col("lang") === someLang && col("text") === oneText).count())
   }
 
-  test("columnar reads are opt-in: default rows; auto vectorizes fixed-width; all forces vectors") {
+  test("a row scan carries sum(ts) exactly; min(ts) pushes down") {
     val root = freshRoot()
     writeTable(pagesDf, root, "pages")
     val got = spark.read.format("fsst").option("root", root).option("table", "pages").load()
-    // AQE finalizes the physical plan at execution: run, THEN inspect
-    def executedPlanOf(d: org.apache.spark.sql.DataFrame): String = {
-      d.collect(); d.queryExecution.executedPlan.toString
-    }
-    // default is the measured winner: rows everywhere (BASELINE.md r4b)
-    val defPlan = executedPlanOf(got.groupBy().sum("ts"))
-    assert(!defPlan.contains("ColumnarToRow"), s"default scan should be row-based:\n$defPlan")
-    // columnar=auto vectorizes fixed-width projections only; sum is NOT a
-    // pushed aggregate, so the scan really carries the rows
-    val auto = spark.read.format("fsst").option("root", root).option("table", "pages")
-      .option("columnar", "auto").load()
-    val sumDf = auto.groupBy().sum("ts")
-    val dataPlan = executedPlanOf(sumDf)
-    assert(dataPlan.contains("ColumnarToRow"), s"auto fixed-width scan not columnar:\n$dataPlan")
+    // sum is NOT a pushed aggregate, so the scan really carries the rows
+    val sumDf = got.groupBy().sum("ts")
     assert(sumDf.collect()(0) == pagesDf.groupBy().sum("ts").collect()(0))
-    val textPlan = executedPlanOf(auto.select("text", "ts"))
-    assert(!textPlan.contains("ColumnarToRow"), s"auto byte scan should be row-based:\n$textPlan")
-    // columnar=all forces vectors even for byte columns (results identical)
-    val all = spark.read.format("fsst").option("root", root).option("table", "pages")
-      .option("columnar", "all").load()
-    assert(executedPlanOf(all.select("text", "ts")).contains("ColumnarToRow"))
-    assert(all.agg(sum(octet_length(col("text")))).collect()(0) ==
-      got.agg(sum(octet_length(col("text")))).collect()(0))
-    // metadata-only scans (pushed aggregate) have no columnar batch to build
+    // metadata-only scans (pushed aggregate) decode no chunk
     val aggPlan = got.agg(min("ts")).queryExecution.executedPlan.toString
-    assert(aggPlan.contains("PushedAggregates") && !aggPlan.contains("ColumnarToRow"))
+    assert(aggPlan.contains("PushedAggregates"), s"no aggregate pushdown in plan:\n$aggPlan")
   }
 
   test("IN-lists on byte columns answer structurally; key prefixes prune chunks") {
