@@ -228,7 +228,11 @@ object FsstTrainer {
     val hashVal = new Array[Long](HashTabSize)
     val hashIcl = new Array[Long](HashTabSize)
 
-    locally {
+    // in a method: a loop in a constructor block is never JIT-compiled
+    // (HotSpot skips the OSR compile of `<init>`)
+    initTables()
+
+    private def initTables(): Unit = {
       var i = 0
       while (i < 256) {
         symVal(i) = i

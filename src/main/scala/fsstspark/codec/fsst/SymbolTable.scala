@@ -198,7 +198,12 @@ final class FsstEncoder(table: SymbolTable) {
   private val lim: Int = table.suffixLim
   private val tail = new Array[Byte](ChunkSize + ChunkPad)
 
-  locally { // build lookup structures from the finalized symbols
+  // A loop in a constructor block is never JIT-compiled (HotSpot skips the
+  // OSR compile of `<init>`), so the tables are built in a method.
+  buildTables()
+
+  /** Lookup structures from the finalized symbols. */
+  private def buildTables(): Unit = {
     java.util.Arrays.fill(hashIcl, IclFree)
     var i = 0
     while (i < 256) { byteCodes(i) = packCL(CodeMask, 1); i += 1 }
@@ -311,7 +316,9 @@ final class FsstEncoder(table: SymbolTable) {
 final class FsstDecoder(table: SymbolTable) {
   private val decLen = new Array[Int](256)
   private val decSym = new Array[Long](256)
-  locally {
+  fillTables() // in a method: a constructor loop is never JIT-compiled
+
+  private def fillTables(): Unit = {
     var i = 0
     while (i < table.nSymbols) { decLen(i) = table.symLen(i); decSym(i) = table.symVal(i); i += 1 }
   }

@@ -89,6 +89,7 @@ object ChunkFileWriter {
     org.apache.spark.sql.Encoders.product[ChunkResult].schema.filter(_.name != "column")))
   private lazy val ManifestFileSchema = parquetSchema(StructType(
     ParquetTableIO.ManifestSchema.filter(_.name != "batch")))
+  private lazy val TombstoneFileSchema = parquetSchema(ParquetTableIO.TombSchema)
 
   /** Writes every chunk of one partition into `batchDir` and returns
     * their manifest rows — the task body of a `writeChunks` job.
@@ -113,6 +114,17 @@ object ChunkFileWriter {
     finally pw.close()
   }
 
+  /** One batch's `victims` as ONE tombstone file gated on `batch`,
+    * written on the driver.
+    */
+  private[io] def writeTombstones(path: Path, conf: Configuration,
+      victims: Array[(Long, String)], batch: String): Unit = {
+    val pw = open(path, conf, TombstoneFileSchema)
+    try victims.foreach { case (id, c) =>
+      pw.write(row(TombstoneFileSchema, Iterator(id, c, batch)))
+    } finally pw.close()
+  }
+
   /** A parquet row from values in schema order; null and None leave an
     * optional field absent.
     */
@@ -128,8 +140,15 @@ object ChunkFileWriter {
     g
   }
 
-  /** Snappy, as Spark's parquet writer: the codec `stored_ratio` is read on. */
+  /** Snappy, as Spark's parquet writer: the codec `stored_ratio` is read
+    * on. A chunk's key and value blobs skip the dictionary: they are
+    * mostly unique codec output of up to several MB each, which the
+    * dictionary pass would hash in full only to fall back to PLAIN (the
+    * manifest and tombstone schemas lack these columns).
+    */
   private def open(path: Path, conf: Configuration, schema: MessageType): ParquetWriter[Group] =
     ExampleParquetWriter.builder(path).withConf(conf).withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withDictionaryEncoding("key_blob", false).withDictionaryEncoding("value_blob", false)
+      .build()
 }

@@ -260,6 +260,18 @@ object ParquetTableIO {
       StructField("value_max", LongType), StructField("batch", StringType)))
   }
 
+  /** Tombstone schema, explicit on every read: files written before the
+    * gating column existed read `gated_by` as null — i.e. as IMMEDIATE
+    * deletes, which is exactly what they were — and mixed old/new
+    * directories resolve deterministically instead of by whichever footer
+    * schema inference happens to pick.
+    */
+  private[io] val TombSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("chunk_id", LongType), StructField("column", StringType),
+      StructField("gated_by", StringType)))
+  }
+
   /** Longest wait, after a write job failed, for its remaining tasks to
     * stop before the batch is aborted.
     */
@@ -270,6 +282,7 @@ final class ParquetTableIO(root: String) extends TableIO {
   private def dataDir(table: String) = s"$root/$table/data"
   private def manifestDir(table: String) = s"$root/$table/manifest"
   private def tombDir(table: String) = s"$root/$table/tombstones"
+  private def tombFile(table: String, batch: String) = s"${tombDir(table)}/part-$batch.parquet"
   private def commitsDir(table: String) = s"$root/$table/commits"
 
   // ------------------------------------------------------ batch commits
@@ -469,17 +482,6 @@ final class ParquetTableIO(root: String) extends TableIO {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Tombstone read schema, always explicit: files written before the
-    * gating column existed read `gated_by` as null — i.e. as IMMEDIATE
-    * deletes, which is exactly what they were — and mixed old/new
-    * directories resolve deterministically instead of by whichever footer
-    * schema inference happens to pick.
-    */
-  private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("chunk_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("column", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("gated_by", org.apache.spark.sql.types.StringType)))
-
   /** EFFECTIVE tombstones under ONE committed-batch snapshot: immediate
     * deletes (gated_by null) plus deletes gated on a batch in
     * `committed`. A gated tombstone whose batch never committed is
@@ -506,7 +508,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     import spark.implicits._
     if (!hasTombstones(spark, table))
       Seq.empty[(Long, String, String)].toDF("chunk_id", "column", "applies_before")
-    else spark.read.schema(tombSchema).parquet(tombDir(table))
+    else spark.read.schema(ParquetTableIO.TombSchema).parquet(tombDir(table))
       .filter(col("gated_by").isNull || col("gated_by").isin(committed.toSeq: _*))
       .select(col("chunk_id"), col("column"),
         coalesce(col("gated_by"), lit("~")).as("applies_before"))
@@ -546,10 +548,10 @@ final class ParquetTableIO(root: String) extends TableIO {
     */
   override def replaceChunks(spark: SparkSession, table: String,
       results: Dataset[ChunkResult], removeChunkIds: DataFrame): Unit =
-    writeBatch(spark, table, results, Some(removeChunkIds))
+    writeBatch(spark, table, results, Some(victimRows(removeChunkIds)))
 
   private def writeBatch(spark: SparkSession, table: String, results: Dataset[ChunkResult],
-      victims: Option[DataFrame]): Unit = {
+      victims: Option[Array[(Long, String)]]): Unit = {
     val batch = beginBatch(spark, table)
     val dir = batchDataDir(table, batch)
     val conf = new org.apache.spark.util.SerializableConfiguration(
@@ -628,7 +630,8 @@ final class ParquetTableIO(root: String) extends TableIO {
     *     see their chunks as duplicates);
     *  2. write the entries as one manifest file under the batch's
     *     manifest partition, with no Spark job;
-    *  3. write the victims as tombstones gated on this batch;
+    *  3. write the victims as one tombstone file gated on this batch,
+    *     also with no Spark job;
     *  4. flip the commit marker, so adds and deletes become visible
     *     together.
     * A failure at any step aborts the batch: the table is untouched (gated
@@ -636,7 +639,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     * victims = nothing to commit: the batch is aborted, no empty snapshot.
     */
   def commitBatch(spark: SparkSession, table: String, batch: String,
-      entries: Array[ManifestEntry], victims: Option[DataFrame]): Unit =
+      entries: Array[ManifestEntry], victims: Option[Array[(Long, String)]]): Unit =
     try {
       entries.groupBy(e => (e.chunkId, e.column)).collectFirst {
         case ((cid, c), g) if g.length > 1 =>
@@ -651,13 +654,18 @@ final class ParquetTableIO(root: String) extends TableIO {
           ChunkFileWriter.writeManifest(new org.apache.hadoop.fs.Path(
             s"${manifestDir(table)}/batch=$batch/part-${java.util.UUID.randomUUID()}.parquet"),
             spark.sparkContext.hadoopConfiguration, entries)
-        victims.foreach(writeTombstones(_, table, batch))
+        victims.filter(_.nonEmpty).foreach(vs => ChunkFileWriter.writeTombstones(
+          new org.apache.hadoop.fs.Path(tombFile(table, batch)),
+          spark.sparkContext.hadoopConfiguration, vs, batch))
         markCommitted(spark, table, batch)
       }
     } catch { case e: Throwable => abortBatch(spark, table, batch); throw e }
 
-  /** Remove files under the batch directory that no entry names. Paths
-    * compare scheme-normalized.
+  /** Remove files under the batch directory, at any depth, that no entry
+    * names. Paths compare scheme-normalized. The walk uses `listStatus`:
+    * `listFiles` builds a `LocatedFileStatus` per file, whose permission
+    * and owner a local file system without the native Hadoop library
+    * reads by forking `ls -ld`.
     */
   private def deleteOrphanFiles(spark: SparkSession, table: String, batch: String,
       entries: Array[ManifestEntry]): Unit = {
@@ -665,19 +673,22 @@ final class ParquetTableIO(root: String) extends TableIO {
     val f = fs(spark, dataDir(table))
     if (!f.exists(dirP)) return
     val named = entries.iterator.map(e => new org.apache.hadoop.fs.Path(e.file).toUri.getPath).toSet
-    val it = f.listFiles(dirP, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (visible(st.getPath.getName) && !named.contains(st.getPath.toUri.getPath))
+    def sweep(dir: org.apache.hadoop.fs.Path): Unit = f.listStatus(dir).foreach { st =>
+      if (st.isDirectory) sweep(st.getPath)
+      else if (visible(st.getPath.getName) && !named.contains(st.getPath.toUri.getPath))
         f.delete(st.getPath, false)
     }
+    sweep(dirP)
   }
 
-  /** Deletes gated on `batch`: they take effect when its marker lands. */
-  private def writeTombstones(victims: DataFrame, table: String, batch: String): Unit =
-    victims.select(col("chunk_id").cast("long"), col("column").cast("string"),
-        lit(batch).as("gated_by"))
-      .write.mode(SaveMode.Append).parquet(tombDir(table))
+  /** (chunk_id, column) rows collected to the driver for [[commitBatch]]:
+    * one per deleted (chunk, column), the size of the manifest rows a
+    * batch commits. A local DataFrame collects with no Spark job; a null
+    * id or column matches no manifest row, so it is dropped.
+    */
+  private def victimRows(victims: DataFrame): Array[(Long, String)] =
+    victims.select(col("chunk_id").cast("long"), col("column").cast("string")).na.drop()
+      .collect().map(r => (r.getLong(0), r.getString(1)))
 
   /** A fresh id strictly after every id this table has committed —
     * public for non-batch catalog metadata that must order against the
@@ -688,11 +699,12 @@ final class ParquetTableIO(root: String) extends TableIO {
     mintBatchId(spark, table)
 
   /** Abort an uncommitted (hence invisible) batch: delete its data
-    * directory and manifest partition. Idempotent.
+    * directory, manifest partition and tombstone file. Idempotent.
     */
   def abortBatch(spark: SparkSession, table: String, batch: String): Unit = {
     val f = fs(spark, dataDir(table))
-    Seq(batchDataDir(table, batch), s"${manifestDir(table)}/batch=$batch").foreach { d =>
+    Seq(batchDataDir(table, batch), s"${manifestDir(table)}/batch=$batch",
+        tombFile(table, batch)).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       if (f.exists(p)) f.delete(p, true)
     }
@@ -753,7 +765,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     val dels =
       if (!hasTombstones(spark, table))
         Seq.empty[(String, Long)].toDF("batch", "n_deletes_gated")
-      else spark.read.schema(tombSchema).parquet(tombDir(table))
+      else spark.read.schema(ParquetTableIO.TombSchema).parquet(tombDir(table))
         .filter(col("gated_by").isNotNull)
         .groupBy(col("gated_by").as("batch"))
         .agg(count(lit(1)).as("n_deletes_gated"))
@@ -1029,7 +1041,7 @@ final class ParquetTableIO(root: String) extends TableIO {
     * readable: they apply to every snapshot.
     */
   override def removeChunks(spark: SparkSession, table: String, chunkIds: DataFrame): Unit =
-    commitBatch(spark, table, beginBatch(spark, table), Array.empty, Some(chunkIds))
+    commitBatch(spark, table, beginBatch(spark, table), Array.empty, Some(victimRows(chunkIds)))
 
   override def tableExists(spark: SparkSession, table: String): Boolean =
     committedBatches(spark, table).nonEmpty

@@ -304,9 +304,9 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
   // so a concurrent commit between the two calls cannot flip an
   // accepted delete into a mid-execution failure (the plan-time answer
   // is the one executed — standard snapshot-at-plan semantics)
-  @volatile private var cachedDelete: Option[(Seq[Filter], Option[org.apache.spark.sql.DataFrame])] = None
+  @volatile private var cachedDelete: Option[(Seq[Filter], Option[Array[(Long, String)]])] = None
 
-  private def victimsFor(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] =
+  private def victimsFor(filters: Array[Filter]): Option[Array[(Long, String)]] =
     cachedDelete match {
       case Some((k, v)) if k == filters.toSeq => v
       case _ =>
@@ -324,8 +324,10 @@ final class FsstTable(root: String, tableName: String, tableSchema: StructType,
       s"DELETE FROM fsst table: ${filters.mkString(" AND ")} is not chunk-aligned — " +
         "SQL DELETE runs it as a copy-on-write rewrite of the matching chunks"))
     // a delete matching nothing commits nothing (no empty delete batch)
-    if (!victims.isEmpty)
-      new ParquetTableIO(root).removeChunks(SparkSession.active, tableName, victims)
+    if (victims.nonEmpty) {
+      val (spark, io) = (SparkSession.active, new ParquetTableIO(root))
+      io.commitBatch(spark, tableName, io.beginBatch(spark, tableName), Array.empty, Some(victims))
+    }
     // the plan-time answer is now stale: a reused Table instance must
     // recompute for any further DELETE with the same filters
     cachedDelete = None
@@ -925,7 +927,7 @@ private[sources] sealed trait ManifestView {
     */
   def fold(specs: Array[AggSpec], anchor: String): Array[Any]
   /** [[FsstScan.chunkAlignedVictims]] over this view. */
-  def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame]
+  def alignedVictims(filters: Array[Filter]): Option[Array[(Long, String)]]
 }
 
 private[sources] object ManifestView {
@@ -974,7 +976,7 @@ private[sources] object ManifestView {
             .map(java.lang.Long.valueOf).orNull
       }
     }
-    def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] = {
+    def alignedVictims(filters: Array[Filter]): Option[Array[(Long, String)]] = {
       val full = FsstScan.fullyTrue(filters).getOrElse(return None)
       val (victims, rest) = m.partition(e => FsstScan.keySurvives(e.minKey, e.maxKey, filters))
       // alignment: a chunk that MAY hold a matching key is FULLY covered
@@ -983,9 +985,7 @@ private[sources] object ManifestView {
       // a victim id may be a non-victim
       val ids = victims.iterator.map(_.chunkId).toSet
       if (rest.exists(e => ids(e.chunkId))) return None
-      val spark = SparkSession.active
-      import spark.implicits._
-      Some(victims.map(e => (e.chunkId, e.column)).distinct.toSeq.toDF("chunk_id", "column"))
+      Some(victims.map(e => (e.chunkId, e.column)).distinct)
     }
   }
 
@@ -1032,9 +1032,9 @@ private[sources] object ManifestView {
     }
     // the alignment check and the duplicate-id agreement check are each a
     // filter + limit-1 probe (the pruning predicates push into the
-    // manifest parquet scan), and the victims stay a DataFrame the
-    // tombstone write consumes without collecting them to the driver
-    def alignedVictims(filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] = {
+    // manifest parquet scan); the victims are then collected, one row per
+    // deleted (chunk, column), for the driver's tombstone write
+    def alignedVictims(filters: Array[Filter]): Option[Array[(Long, String)]] = {
       val full = FsstScan.fullyTrueCond(filters).getOrElse(return None)
       val keys = m.select("chunk_id", "column", "min_key", "max_key")
       val mayMatch = FsstScan.keyPruneCond(filters)
@@ -1043,7 +1043,8 @@ private[sources] object ManifestView {
       if (!keys.filter(!mayMatch)
           .join(victims.select("chunk_id").distinct(), Seq("chunk_id"), "left_semi")
           .isEmpty) return None
-      Some(victims.select("chunk_id", "column").distinct())
+      Some(victims.select("chunk_id", "column").distinct().collect()
+        .map(r => (r.getLong(0), r.getString(1))))
     }
   }
 }
@@ -1505,11 +1506,11 @@ private[sources] object FsstScan {
     *
     * The [[ManifestView.Driver]] view decides from its snapshot rows
     * with no Spark job; the [[ManifestView.Distributed]] view runs two
-    * limit-1 manifest probes and returns the victims as a DataFrame, so
-    * a TRUNCATE of a 100 TB table stays metadata-distributed end to end.
+    * limit-1 manifest probes and collects the victims, one row per
+    * (chunk, column) — as many as the manifest rows a commit holds.
     */
   def chunkAlignedVictims(view: ManifestView,
-      filters: Array[Filter]): Option[org.apache.spark.sql.DataFrame] =
+      filters: Array[Filter]): Option[Array[(Long, String)]] =
     view.alignedVictims(if (filters.isEmpty) Array[Filter](new AlwaysTrue()) else filters)
 
   /** Filters this source can use for chunk pruning. */

@@ -1,6 +1,5 @@
 package fsstspark.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
@@ -33,7 +32,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    [[fsstspark.io.ChunkFileWriter]]), and commits adds + tombstones
   *    for the planned victims under ONE marker through the catalog's one
   *    commit ([[fsstspark.io.ParquetTableIO.commitBatch]]: the manifest
-  *    file is written on the driver, the tombstones by a Spark job) —
+  *    file and the tombstone file are written on the driver) —
   *    a crash anywhere leaves the pre-operation state, and `VERSION AS
   *    OF` a pre-operation snapshot still reads the old chunks
   *    (batch-scoped tombstones).
@@ -105,15 +104,7 @@ final class FsstRowLevelOperation(root: String, table: String, tableSchema: Stru
         // plain-append commit semantics (and a no-match no-insert
         // operation aborts the empty batch: no empty snapshot).
         override def toBatch: BatchWrite =
-          new FsstBatchWrite(root, table, tableSchema, () => {
-            val vs = plannedVictims.getOrElse(Array.empty[(Long, String)])
-            if (vs.isEmpty) None
-            else {
-              val spark = SparkSession.active
-              import spark.implicits._
-              Some(vs.toSeq.toDF("chunk_id", "column"))
-            }
-          })
+          new FsstBatchWrite(root, table, tableSchema, () => plannedVictims.filter(_.nonEmpty))
       }
     }
   }

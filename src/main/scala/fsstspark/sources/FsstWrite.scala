@@ -38,7 +38,7 @@ final class FsstWriteBuilder(root: String, table: String, tableSchema: StructTyp
 
   // None = plain append; Some(victims) = overwrite: tombstone these
   // (chunk_id, column) rows in the SAME snapshot the new data commits in
-  private var overwriteVictims: Option[org.apache.spark.sql.DataFrame] = None
+  private var overwriteVictims: Option[Array[(Long, String)]] = None
 
   /** `INSERT OVERWRITE` / `writeTo(...).overwrite(cond)` — accepted when
     * the predicate is CHUNK-ALIGNED (the same coverage test as metadata
@@ -47,8 +47,8 @@ final class FsstWriteBuilder(root: String, table: String, tableSchema: StructTyp
     * data flip visibility through ONE commit marker
     * ([[ParquetTableIO.commitBatch]]), so a crash at
     * any point leaves the pre-overwrite state — never a half-overwrite.
-    * The victim DataFrame is built BEFORE any data lands (its
-    * committed-batch snapshot is taken now), so it can never name the
+    * The victims are planned BEFORE any data lands (from the
+    * committed-batch snapshot of now), so they can never name the
     * chunks this very write is adding.
     */
   override def overwrite(filters: Array[org.apache.spark.sql.sources.Filter]): WriteBuilder = {
@@ -112,7 +112,7 @@ private[sources] final case class FsstWriterCommit(entries: Array[ManifestEntry]
   * INSERT commits nothing.
   */
 final class FsstBatchWrite(root: String, table: String, tableSchema: StructType,
-    victimsAtCommit: () => Option[org.apache.spark.sql.DataFrame] = () => None)
+    victimsAtCommit: () => Option[Array[(Long, String)]] = () => None)
     extends BatchWrite {
   private val spark = SparkSession.active
   private val io = new ParquetTableIO(root)

@@ -130,4 +130,91 @@ class TableIOSpec extends AnyFunSuite {
     assert(io.readChunks(spark, "docs").count() == n)
     assert(batchDirs(root, "docs") == dirs, "the refused batch was not aborted")
   }
+
+  /** The first `n` chunks of the docs corpus, written into a fresh batch
+    * of `table` by one [[ChunkFileWriter]]: the batch, its manifest rows
+    * and the chunks written. `twice` writes each chunk a second time
+    * under the complement of its id.
+    */
+  private def chunkBatch(io: ParquetTableIO, table: String, n: Int, twice: Boolean = false)
+      : (String, Array[ManifestEntry], Array[fsstspark.pipeline.ChunkResult]) = {
+    val first = EncodePipeline.encodeBytesLocal(Queries.docsKV(spark, sf), "text", 8L << 10)
+      .orderBy("chunk_id").take(n)
+    val chunks = if (twice) first ++ first.map(c => c.copy(chunk_id = ~c.chunk_id)) else first
+    val batch = io.beginBatch(spark, table)
+    val w = new ChunkFileWriter(io.batchDataDir(table, batch),
+      spark.sparkContext.hadoopConfiguration, 0, 0L)
+    chunks.foreach(w.write)
+    (batch, w.commit(), chunks)
+  }
+
+  test("a commit deletes unnamed files at any depth of its batch and keeps hidden ones") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val root = Files.createTempDirectory("orphan-sweep").toString
+    val io = new ParquetTableIO(root)
+    val (batch, entries, Array(chunk)) = chunkBatch(io, "docs", 1)
+    val written = Paths.get(new java.net.URI(entries.head.file))
+    // the chunk file sits one directory deep (column=text/); a copy under
+    // a new visible name there is what a dead executor's attempt leaves
+    val dir = written.getParent
+    assert(dir.getParent == Paths.get(io.batchDataDir("docs", batch)))
+    val copy = Files.copy(written, dir.resolve("part-orphan.parquet"))
+    val hidden = Files.write(dir.resolve(".hidden"), Array[Byte](1, 2, 3))
+    io.commitBatch(spark, "docs", batch, entries, None)
+    assert(!Files.exists(copy), "the unnamed copy survived the commit")
+    assert(Files.exists(hidden) && Files.exists(written))
+    assert(io.readChunks(spark, "docs").select("chunk_id", "column").as[(Long, String)]
+      .collect().toSeq == Seq((chunk.chunk_id, chunk.column)))
+  }
+
+  test("chunk files store key and value blobs without a dictionary and round-trip") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("blob-encoding").toString
+    val io = new ParquetTableIO(root)
+    // every blob twice: parquet's default encodings would dictionary-encode it
+    val (_, entries, chunks) = chunkBatch(io, "docs", 8, twice = true)
+    assert(chunks.length == 16 && entries.map(_.file).distinct.length == 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(entries.head.file)
+    def footer(p: Path) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try r.getFooter finally r.close()
+    }
+    def columns(p: Path) = footer(p).getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .map(c => c.getPath.toDotString -> c).toMap
+    val rows = {
+      val reader = GroupReader.open(path, conf)
+      try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
+      finally reader.close()
+    }
+    assert(rows.map(_.getLong("chunk_id", 0)) == chunks.map(_.chunk_id).toVector)
+    rows.zip(chunks).foreach { case (g, c) =>
+      assert(g.getString("codec", 0) == c.codec && g.getLong("n_rows", 0) == c.n_rows)
+      assert(g.getBinary("key_blob", 0).getBytes.sameElements(c.key_blob))
+      assert(g.getBinary("value_blob", 0).getBytes.sameElements(c.value_blob))
+    }
+    // the same rows under parquet's default encodings (dictionary first)
+    val schema = footer(path).getFileMetaData.getSchema
+    val refPath = new Path(s"$root/reference.parquet")
+    val pw = ExampleParquetWriter.builder(refPath).withConf(conf).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach(pw.write) finally pw.close()
+    val (got, ref) = (columns(path), columns(refPath))
+    assert(got.keySet == ref.keySet)
+    got.foreach { case (c, meta) =>
+      if (c == "key_blob" || c == "value_blob") {
+        assert(ref(c).hasDictionaryPage, s"fixture: $c would not be dictionary-encoded")
+        assert(!meta.hasDictionaryPage && meta.getEncodings.asScala.forall(!_.usesDictionary),
+          s"$c is dictionary-encoded: ${meta.getEncodings}")
+      } else assert(meta.getEncodings == ref(c).getEncodings, s"$c encodings changed")
+    }
+    assert(got("codec").hasDictionaryPage)
+  }
 }
