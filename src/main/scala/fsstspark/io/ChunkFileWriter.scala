@@ -144,11 +144,12 @@ object ChunkFileWriter {
     * on. A chunk's key and value blobs skip the dictionary: they are
     * mostly unique codec output of up to several MB each, which the
     * dictionary pass would hash in full only to fall back to PLAIN (the
-    * manifest and tombstone schemas lack these columns).
+    * manifest and tombstone schemas lack these columns). The file is
+    * created through [[CatalogFiles]].
     */
   private def open(path: Path, conf: Configuration, schema: MessageType): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(path).withConf(conf).withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
+    ExampleParquetWriter.builder(CatalogFiles.outputFile(path, conf)).withConf(conf)
+      .withType(schema).withCompressionCodec(CompressionCodecName.SNAPPY)
       .withDictionaryEncoding("key_blob", false).withDictionaryEncoding("value_blob", false)
       .build()
 }

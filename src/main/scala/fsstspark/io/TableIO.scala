@@ -314,8 +314,8 @@ final class ParquetTableIO(root: String) extends TableIO {
     */
   private def markCommitted(spark: SparkSession, table: String, batch: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(commitsDir(table))
-    val f = fs(spark, commitsDir(table))
-    f.mkdirs(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    CatalogFiles.mkdirs(dir, conf)
     val late = committedBatches(spark, table).filter(_ > batch)
     if (late.nonEmpty)
       throw new IllegalStateException(
@@ -323,7 +323,7 @@ final class ParquetTableIO(root: String) extends TableIO {
           s"'${late.max}' is already committed. A concurrent writer violated the " +
           "single-writer contract; this batch remains uncommitted (invisible) — " +
           "re-run the write to mint a fresh id.")
-    f.create(new org.apache.hadoop.fs.Path(dir, batch), true).close()
+    CatalogFiles.touch(new org.apache.hadoop.fs.Path(dir, batch), conf)
   }
 
   private def committedBatches(spark: SparkSession, table: String): Array[String] = {
@@ -611,7 +611,8 @@ final class ParquetTableIO(root: String) extends TableIO {
     */
   def beginBatch(spark: SparkSession, table: String): String = {
     assertNotLegacy(spark, table)
-    fs(spark, commitsDir(table)).mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)))
+    CatalogFiles.mkdirs(new org.apache.hadoop.fs.Path(commitsDir(table)),
+      spark.sparkContext.hadoopConfiguration)
     mintBatchId(spark, table)
   }
 

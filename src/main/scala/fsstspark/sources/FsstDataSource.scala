@@ -1672,20 +1672,29 @@ private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGr
   val colOf: Map[String, Int] = part.colFiles.zipWithIndex
     .collect { case (cf, i) if cf.file.nonEmpty => cf.column -> i }.toMap
 
-  private def loadColumn(cf: ColFile): java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])] = {
+  /** The projected read conf, one copy per decoder: `readValues` is fixed
+    * per partition, and copying a `Configuration` per chunk file opened
+    * cost more than reading a small one. Repetition mirrors the Spark
+    * writer: primitive Long → required, Array[Byte] → optional (parquet
+    * projection checks repetition exactly). Key-only scans project
+    * value_blob out entirely — the anchor column's compressed values never
+    * leave the parquet pages.
+    */
+  private lazy val projectedConf: Configuration = {
     val c = new Configuration(conf)
-    // repetition mirrors the Spark writer: primitive Long → required,
-    // Array[Byte] → optional (parquet projection checks repetition exactly).
-    // Key-only scans project value_blob out entirely — the anchor column's
-    // compressed values never leave the parquet pages.
     c.set(ReadSupport.PARQUET_READ_SCHEMA,
       if (part.readValues)
         "message proj { required int64 chunk_id; optional binary key_blob; optional binary value_blob; }"
       else
         "message proj { required int64 chunk_id; optional binary key_blob; }")
+    c
+  }
+
+  private def loadColumn(cf: ColFile): java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])] = {
     val ids = part.chunkIds.map(java.lang.Long.valueOf).toSet.asJava
     val pred = FilterApi.in(FilterApi.longColumn("chunk_id"), new java.util.HashSet(ids))
-    val reader = GroupReader.open(new org.apache.hadoop.fs.Path(cf.file), c, FilterCompat.get(pred))
+    val reader = GroupReader.open(new org.apache.hadoop.fs.Path(cf.file), projectedConf,
+      FilterCompat.get(pred))
     val out = new java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])]()
     try {
       var g = reader.read()

@@ -2,7 +2,7 @@ package fsstspark.sources
 
 import fsstspark.io.ParquetTableIO
 import fsstspark.pipeline.EncodePipeline
-import fsstspark.pipeline.EncodePipeline.ColSpec
+import fsstspark.pipeline.EncodePipeline.{ColSpec, ReadSpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
@@ -1653,4 +1653,192 @@ class DataSourceSpec extends AnyFunSuite {
     assert(io.manifestRows(spark, "pages", None).isEmpty)
     assert(count() == n && keysNow == keys)
   }
+
+  /** Flips the byte at offset `at` of a local file. */
+  private def flipAt(file: String, at: Long): Unit = {
+    val f = new java.io.RandomAccessFile(
+      new java.io.File(new org.apache.hadoop.fs.Path(file).toUri), "rw")
+    try {
+      f.seek(at)
+      val b = f.read()
+      f.seek(at)
+      f.write(b ^ 0xff)
+    } finally f.close()
+  }
+
+  /** `column`'s metadata in the first row group of a parquet file. */
+  private def columnMeta(file: String, column: String) = {
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter.getBlocks.get(0).getColumns.asScala
+      .find(_.getPath.toDotString == column).get
+    finally reader.close()
+  }
+
+  /** Flips the byte at the middle of `column`'s column chunk in the first
+    * row group of a local parquet file, located through the file's footer.
+    */
+  private def flipMidByte(file: String, column: String): Unit = {
+    val cc = columnMeta(file, column)
+    flipAt(file, cc.getStartingPos + cc.getTotalSize / 2)
+  }
+
+  /** Flips the first byte of `column`'s minimum statistic where the file's
+    * footer holds it: the row-group statistic a pushed-down filter reads.
+    */
+  private def flipFooterStatistic(file: String, column: String): Unit = {
+    val needle = columnMeta(file, column).getStatistics.getMinBytes
+    val bytes = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(file).toUri))
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    val footerStart = bytes.length - 8 - footerLen
+    val at = (footerStart to bytes.length - 8 - needle.length).reverseIterator
+      .find(i => java.util.Arrays.equals(bytes, i, i + needle.length, needle, 0, needle.length))
+    assert(at.isDefined, s"the footer of $file holds no statistic of $column")
+    flipAt(file, at.get.toLong)
+  }
+
+  /** `rows` must fail, and on a checksum: a corrupt catalog file never
+    * reads as rows.
+    */
+  private def failsOnChecksum(what: String)(rows: => Array[org.apache.spark.sql.Row]): Unit = {
+    val e = intercept[Exception](rows)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage).toLowerCase)
+    assert(messages.exists(_.contains("checksum")), s"$what failed, but not on a checksum: $e")
+  }
+
+  private val pageReadSpecs = Seq(ReadSpec("text"), ReadSpec("html"),
+    ReadSpec("ts", isLong = true), ReadSpec("score", isDouble = true))
+
+  /** The one parquet file under `dir` (at any depth). */
+  private def onlyParquet(dir: String): String = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val files = try walk.iterator.asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      finally walk.close()
+    assert(files.length == 1, s"expected one parquet file under $dir: $files")
+    new java.io.File(files.head).toURI.toString
+  }
+
+  test("a flipped byte in a chunk, manifest or tombstone file fails every read") {
+    def read(root: String) = spark.read.format("fsst").option("root", root)
+      .option("table", "pages").option("stringColumns", "text").load()
+    val firstKey = pagesDf.agg(min("url")).first().getString(0)
+    // a chunk file: the middle of one text file's value_blob column chunk
+    val root = freshRoot()
+    val io = writeTable(pagesDf, root, "pages")
+    val victim = io.manifest(spark, "pages").filter(col("column") === "text").first()
+    val key = victim.getAs[String]("min_key")
+    flipMidByte(victim.getAs[String]("file"), "value_blob")
+    failsOnChecksum("chunk file: connector scan")(read(root).select("key", "text").collect())
+    failsOnChecksum("chunk file: connector point lookup")(
+      read(root).filter(col("key") === key).select("key", "text").collect())
+    failsOnChecksum("chunk file: readChunks + decodeColumns")(
+      EncodePipeline.decodeColumns(io.readChunks(spark, "pages"), pageReadSpecs).collect())
+    // a manifest file, flipped before any read has decoded it: once in a
+    // column chunk, once in the footer's min_key statistic, which
+    // chunksForKey's pushed-down filter reads
+    for ((where, flip) <- Seq[(String, String => Unit)](
+        "column chunk" -> (flipMidByte(_, "file")),
+        "footer" -> (flipFooterStatistic(_, "min_key")))) {
+      val mRoot = freshRoot()
+      val mIo = writeTable(pagesDf, mRoot, "pages")
+      flip(onlyParquet(s"$mRoot/pages/manifest"))
+      failsOnChecksum(s"manifest $where: connector scan")(
+        read(mRoot).select("key", "text").collect())
+      failsOnChecksum(s"manifest $where: connector point lookup")(
+        read(mRoot).filter(col("key") === firstKey).select("key", "text").collect())
+      failsOnChecksum(s"manifest $where: chunksForKey + decodeColumns")(
+        EncodePipeline.decodeColumns(mIo.chunksForKey(spark, "pages", firstKey), pageReadSpecs)
+          .collect())
+      failsOnChecksum(s"manifest $where: Spark read")(mIo.manifest(spark, "pages").collect())
+    }
+    // a tombstone file's footer: its gated_by statistic, which the
+    // tombstone read's pushed-down filter reads; a skipped row group
+    // would bring the deleted chunk back
+    val tRoot = freshRoot()
+    val tIo = writeTable(pagesDf, tRoot, "pages")
+    tIo.removeChunks(spark, "pages", tIo.manifest(spark, "pages")
+      .filter(col("chunk_id") === tIo.manifest(spark, "pages").agg(min("chunk_id")).first()
+        .getLong(0))
+      .select("chunk_id", "column"))
+    flipFooterStatistic(onlyParquet(s"$tRoot/pages/tombstones"), "gated_by")
+    failsOnChecksum("tombstone footer: connector scan")(
+      read(tRoot).select("key", "text").collect())
+    failsOnChecksum("tombstone footer: readChunks + decodeColumns")(
+      EncodePipeline.decodeColumns(tIo.readChunks(spark, "pages"), pageReadSpecs).collect())
+  }
+
+  test("local catalog writes fork no chmod and leave the .crc sidecars Hadoop writes") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> conf.get(k))
+    ChmodCountingFs.paths.clear()
+    conf.set("fs.file.impl", classOf[ChmodCountingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val control = new org.apache.hadoop.fs.Path(root, "control")
+    try {
+      writeTable(pagesDf, root, "pages", 8L << 10)
+      val cat = catalogOn(root, "fsst_nochmod")
+      localInsertView(s"$cat.pages", "fsst_insert_nochmod", "ins-", 16)
+      spark.sql(s"INSERT INTO $cat.pages SELECT * FROM fsst_insert_nochmod")
+      val keys = spark.sql(s"SELECT key FROM $cat.pages ORDER BY key").collect()
+        .map(_.getString(0))
+      spark.sql(s"UPDATE $cat.pages SET ts = ts + 1 WHERE key = '${keys(keys.length / 3)}'")
+      spark.sql(s"DELETE FROM $cat.pages WHERE key = '${keys(2 * keys.length / 3)}'")
+      // the counter sees a create through Hadoop's local file system
+      control.getFileSystem(conf).create(control, false).close()
+    } finally saved.foreach {
+      case (k, null) => conf.unset(k)
+      case (k, v) => conf.set(k, v)
+    }
+    val chmods = ChmodCountingFs.paths.asScala.toList
+    assert(chmods.exists(_.endsWith("/control")), s"the chmod counter saw no create: $chmods")
+    val underTable = chmods.filter(_.startsWith(s"$root/pages"))
+    assert(underTable.isEmpty, s"catalog writes forked chmod: ${underTable.take(3)}")
+    // every file the writes made has the sidecar Hadoop writes for its bytes
+    val files = {
+      val walk = Files.walk(Paths.get(root, "pages"))
+      try walk.iterator.asScala.filter(f => Files.isRegularFile(f) &&
+        !f.getFileName.toString.startsWith(".")).toList
+      finally walk.close()
+    }
+    assert(files.exists(_.toString.contains("/commits/")) &&
+      files.exists(_.toString.contains("/manifest/")) &&
+      files.exists(_.toString.contains("/tombstones/")) &&
+      files.exists(_.toString.contains("/data/")), s"missing kinds of catalog file: $files")
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val copies = freshRoot()
+    files.zipWithIndex.foreach { case (f, i) =>
+      val crc = f.resolveSibling(s".${f.getFileName}.crc")
+      assert(Files.exists(crc), s"$f has no .crc sidecar")
+      val out = local.create(new org.apache.hadoop.fs.Path(copies, s"f$i"), false)
+      try out.write(Files.readAllBytes(f)) finally out.close()
+      assert(java.util.Arrays.equals(Files.readAllBytes(crc),
+        Files.readAllBytes(Paths.get(copies, s".f$i.crc"))), s"$crc differs from Hadoop's")
+    }
+  }
+}
+
+/** Hadoop's local file system, recording every path it sets a permission
+  * on: without the native Hadoop library each is a forked `chmod`.
+  */
+class ChmodCountingFs extends org.apache.hadoop.fs.LocalFileSystem(new ChmodCountingRawFs)
+
+class ChmodCountingRawFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def setPermission(p: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    ChmodCountingFs.paths.add(p.toUri.getPath)
+    super.setPermission(p, permission)
+  }
+}
+
+object ChmodCountingFs {
+  val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
