@@ -1,7 +1,7 @@
 package fsstspark.codec
 
 import fsstspark.codec.fsst.{Fsst, FsstTrainer, SymbolTable}
-import fsstspark.util.{BitPacker, ByteArrayBuilder, ByteReader}
+import fsstspark.util.{BitPacker, ByteArrayBuilder, ByteReader, Bytes}
 import scala.collection.mutable
 
 /** Per-column-chunk encodings for string/binary columns.
@@ -165,7 +165,17 @@ object BytesCodec {
     */
   final val MaxDecodedRows: Int = 1 << 26
 
-  def decode(blob: Array[Byte]): Array[Array[Byte]] = {
+  def decode(blob: Array[Byte]): Array[Array[Byte]] = decode(blob, null)
+
+  /** The values at `rows` (strictly ascending row indices; null = every
+    * row), in `rows` order: the FSST paper's random access. FSST decodes
+    * only the selected values, each located from the length list; RAW
+    * copies only their bytes; DICT and RLE index their decoded structure.
+    * Every guard of the full decode still runs over the whole blob: each
+    * length is checked against the blob end whether or not its value is
+    * selected, and the FSST kernel's `dst` guard bounds each value.
+    */
+  def decode(blob: Array[Byte], rows: Array[Int]): Array[Array[Byte]] = {
     val r = new ByteReader(blob)
     val codec = r.readByte()
     val n = r.readVarInt()
@@ -221,13 +231,32 @@ object BytesCodec {
       require(BitPacker.packedSize(n, width) <= scan.remaining,
         s"corrupt dict blob: $n×$width-bit indices exceed ${scan.remaining} remaining bytes")
     }
-    val out = new Array[Array[Byte]](n)
+    if (rows != null) {
+      var j = 0
+      while (j < rows.length) {
+        require(rows(j) >= 0 && rows(j) < n && (j == 0 || rows(j) > rows(j - 1)),
+          s"row ${rows(j)} at position $j: rows must ascend strictly within the blob's $n values")
+        j += 1
+      }
+    }
+    // `j` counts the selected rows passed so far: row i is selected iff it
+    // is rows(j), and every row is when rows == null (then j == i)
+    val m = if (rows == null) n else rows.length
+    @inline def selected(i: Int, j: Int): Boolean = rows == null || (j < m && rows(j) == i)
+    val out = new Array[Array[Byte]](m)
     codec match {
       case RAW =>
         var i = 0
+        var j = 0
         while (i < n) {
           val l = r.readVarInt()
-          if (l > 0) out(i) = r.readBytes(l - 1)
+          if (selected(i, j)) {
+            if (l > 0) out(j) = r.readBytes(l - 1)
+            j += 1
+          } else if (l > 0) {
+            require(l - 1 <= r.remaining, s"corrupt raw blob: value $i of ${l - 1} bytes past blob end")
+            r.pos += l - 1
+          }
           i += 1
         }
       case FSST =>
@@ -245,22 +274,35 @@ object BytesCodec {
         var i = 0
         while (i < n) { lens(i) = r.readVarInt(); i += 1 }
         val dec = table.newDecoder()
-        // decode all values into one buffer, then slice (one alloc per value
-        // is unavoidable given the Array[Array[Byte]] contract)
-        val buf = new Array[Byte](orig.toInt + 8)
+        // decode the selected values into one buffer, then slice (one alloc
+        // per value is unavoidable given the Array[Array[Byte]] contract).
+        // Every row: the declared size. A subset: its worst case, 8 bytes
+        // per code byte, capped by the declared size.
+        val cap = if (rows == null) orig else {
+          var codeBytes = 0L
+          var j = 0
+          while (j < m) { codeBytes += math.max(lens(rows(j)) - 1, 0); j += 1 }
+          math.min(8L * codeBytes, orig)
+        }
+        val buf = new Array[Byte](cap.toInt + 8)
         var sp = r.pos
         i = 0
+        var j = 0
         var dp = 0
         while (i < n) {
+          val sel = selected(i, j)
           if (lens(i) > 0) {
             val encLen = lens(i) - 1
             require(encLen >= 0 && sp + encLen <= blob.length,
               s"corrupt fsst blob: value $i claims $encLen encoded bytes past blob end")
-            val dEnd = dec.decode(blob, sp, encLen, buf, dp)
-            out(i) = java.util.Arrays.copyOfRange(buf, dp, dEnd)
-            dp = dEnd
+            if (sel) {
+              val dEnd = dec.decode(blob, sp, encLen, buf, dp)
+              out(j) = java.util.Arrays.copyOfRange(buf, dp, dEnd)
+              dp = dEnd
+            }
             sp += encLen
           }
+          if (sel) j += 1
           i += 1
         }
         require(dp <= orig, s"corrupt fsst blob: decoded $dp bytes, declared $orig")
@@ -273,28 +315,42 @@ object BytesCodec {
         val ids = new Array[Long](n)
         BitPacker.unpack(blob, r.pos, n, width, ids)
         i = 0
+        var j = 0
         while (i < n) {
           val id = ids(i).toInt
           // id == nDict is the null sentinel; anything beyond is corruption
           // and must fail loudly, not fabricate nulls
           require(id >= 0 && id <= nDict, s"corrupt dict blob: index $id of $nDict at row $i")
-          if (id < nDict) out(i) = dict(id)
+          if (selected(i, j)) {
+            if (id < nDict) out(j) = dict(id)
+            j += 1
+          }
           i += 1
         }
       case RLE =>
         var i = 0
+        var j = 0
         while (i < n) {
           val runLen = r.readVarInt()
           require(runLen > 0 && runLen <= n - i, s"corrupt rle blob: run length $runLen at row $i/$n")
           val l = r.readVarInt()
           val v = if (l > 0) r.readBytes(l - 1) else null
-          var k = 0
-          while (k < runLen) { out(i + k) = v; k += 1 }
           i += runLen
+          if (rows == null) while (j < i) { out(j) = v; j += 1 }
+          else while (j < m && rows(j) < i) { out(j) = v; j += 1 }
         }
       case other => throw new IllegalArgumentException(s"unknown bytes codec id $other")
     }
     out
+  }
+
+  /** The value count a bytes blob declares in its header. */
+  def valueCount(blob: Array[Byte]): Int = {
+    val r = new ByteReader(blob)
+    r.readByte()
+    val n = r.readVarInt()
+    require(n >= 0 && n <= MaxDecodedRows, s"corrupt bytes blob: value count $n")
+    n
   }
 
   // ----------------------------------------------------- predicate pushdown
@@ -732,10 +788,34 @@ object BytesCodec {
 
   /** Array[Byte] wrapper with value equality, for dict/distinct maps. */
   final class ByteKey(val bytes: Array[Byte]) {
-    override val hashCode: Int = java.util.Arrays.hashCode(bytes)
+    override val hashCode: Int = ByteKey.hash(bytes)
     override def equals(o: Any): Boolean = o match {
       case k: ByteKey => java.util.Arrays.equals(bytes, k.bytes)
       case _ => false
+    }
+  }
+
+  object ByteKey {
+    /** Eight bytes per step with a 64-bit multiply-xorshift mix, where
+      * `Arrays.hashCode` takes one byte per step (the distinct probe of
+      * [[stats]] hashes every value). Only hash-set speed depends on it:
+      * `Arrays.equals` decides membership, and the dictionary keeps
+      * insertion order, so the codec choice and the blob bytes do not.
+      */
+    def hash(b: Array[Byte]): Int = {
+      var h = 0x9e3779b97f4a7c15L ^ b.length
+      var i = 0
+      while (i + 8 <= b.length) {
+        h = (h ^ Bytes.getLongLE(b, i)) * 0xbf58476d1ce4e5b9L
+        h ^= h >>> 31
+        i += 8
+      }
+      if (i < b.length) {
+        h = (h ^ Bytes.getPartialLE(b, i, b.length - i)) * 0xbf58476d1ce4e5b9L
+        h ^= h >>> 31
+      }
+      h *= 0x94d049bb133111ebL
+      (h ^ (h >>> 32)).toInt
     }
   }
 }

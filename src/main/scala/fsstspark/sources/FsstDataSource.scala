@@ -3,7 +3,6 @@ package fsstspark.sources
 import java.util.OptionalLong
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -782,8 +781,8 @@ final class FsstScan(root: String, table: String, tableSchema: StructType,
     val conf = new SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
     // row-level mode: the reader must emit EVERY row of the planned
-    // chunks — selectEquals drops non-matching rows, which a group
-    // rewrite would then delete. Filters prune groups only.
+    // chunks — key and value equality drop non-matching rows, which a
+    // group rewrite would then delete. Filters prune groups only.
     val eq = if (rowLevel.isDefined) Array.empty[ColEquals]
       else FsstScan.byteEqFilters(filters, tableSchema)
     new FsstReaderFactory(readSchema(), conf, eq)
@@ -1413,16 +1412,19 @@ private[sources] object FsstScan {
     }
   }
 
-  /** Whole-value equality / IN-list filters on byte/string columns,
-    * handed to the READER: [[BytesCodec.selectEquals]] answers them from
-    * chunk structure (dict membership / RLE run headers / FSST
+  /** Whole-value equality / IN-list filters on the key and on byte/string
+    * columns, handed to the READER: [[BytesCodec.selectEqualsIn]] answers
+    * them from chunk structure (dict membership / RLE run headers / FSST
     * encoded-probe), skipping non-matching chunks without decoding and
     * emitting only matching rows — and since every matched row's value
     * IS one specific target, the filtered column itself is never decoded
-    * at all (IN-lists map each matched index to its target).
+    * at all (IN-lists map each matched index to its target). Key equality
+    * is answered on the key blob before any value column loads, so value
+    * columns load only for chunks holding a probed key
+    * ([[ChunkGroupDecoder]]). Every filter also stays a Spark residual.
     */
   def byteEqFilters(filters: Array[Filter], tableSchema: StructType): Array[ColEquals] = {
-    def isByteCol(c: String) = tableSchema.fields.exists(f => f.name == c && f.name != "key" &&
+    def isByteCol(c: String) = tableSchema.fields.exists(f => f.name == c &&
       (f.dataType == BinaryType || f.dataType == StringType))
     def bytesOf(v: Any): Option[Array[Byte]] = v match {
       case s: String => Some(s.getBytes("UTF-8"))
@@ -1637,7 +1639,9 @@ final class FsstReaderFactory(schema: StructType, conf: SerializableConfiguratio
 }
 
 /** One decoded (and eq-filtered) chunk, as the row reader emits it:
-  * `emit` = row indices to surface, arrays indexed by the
+  * `emit` = row indices to surface. `keys`, `bytesCols` and `eqTargets`
+  * hold the emitted rows only, in emit order; `longCols` hold every row
+  * of the chunk (index them by `rowAt`). Column arrays are indexed by the
   * partition's colFiles order (an entry is null when that column is
   * eq-answered or of the other kind).
   */
@@ -1649,8 +1653,8 @@ private[sources] final case class DecodedChunk(
     keys: Array[Array[Byte]],
     bytesCols: Array[Array[Array[Byte]]],
     longCols: Array[LongCodec.LongColumn],
-    /** per eq-answered column: matched row index → the target it equals */
-    eqTargets: java.util.HashMap[String, java.util.HashMap[Integer, Array[Byte]]]) {
+    /** per eq-answered column (the key's too): the target each emitted row equals */
+    eqTargets: java.util.HashMap[String, Array[Array[Byte]]]) {
   def emitCount: Int = if (emit == null) nRows else emit.length
   @inline def rowAt(j: Int): Int = if (emit == null) j else emit(j)
 }
@@ -1661,6 +1665,12 @@ private[sources] final case class DecodedChunk(
   * decodes once per column under the same key-blob identity guard as
   * [[EncodePipeline.decodeColumns]]. Memory is bounded by
   * chunksPerPartition × nCols × chunk size, not file size.
+  *
+  * Equality filters are answered structurally ([[BytesCodec.selectEqualsIn]]),
+  * and only the rows they select decode. Key equality comes first, on the
+  * key blobs of one present column file read without its value_blob: value
+  * columns then load only for the chunks holding a probed key, and a
+  * partition with none opens no value file at all.
   */
 private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGroupPartition,
     conf: Configuration, eqFilters: Array[ColEquals]) {
@@ -1672,35 +1682,42 @@ private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGr
   val colOf: Map[String, Int] = part.colFiles.zipWithIndex
     .collect { case (cf, i) if cf.file.nonEmpty => cf.column -> i }.toMap
 
-  /** The projected read conf, one copy per decoder: `readValues` is fixed
-    * per partition, and copying a `Configuration` per chunk file opened
-    * cost more than reading a small one. Repetition mirrors the Spark
-    * writer: primitive Long → required, Array[Byte] → optional (parquet
-    * projection checks repetition exactly). Key-only scans project
-    * value_blob out entirely — the anchor column's compressed values never
-    * leave the parquet pages.
+  /** The projected read conf, one copy per decoder and projection:
+    * copying a `Configuration` per chunk file opened cost more than
+    * reading a small one. Repetition mirrors the Spark writer: primitive
+    * Long → required, Array[Byte] → optional (parquet projection checks
+    * repetition exactly). Key-only reads project value_blob out entirely —
+    * those compressed values never leave the parquet pages.
     */
-  private lazy val projectedConf: Configuration = {
+  private def projected(values: Boolean): Configuration = {
     val c = new Configuration(conf)
     c.set(ReadSupport.PARQUET_READ_SCHEMA,
-      if (part.readValues)
+      if (values)
         "message proj { required int64 chunk_id; optional binary key_blob; optional binary value_blob; }"
       else
         "message proj { required int64 chunk_id; optional binary key_blob; }")
     c
   }
+  private lazy val valuesConf = projected(values = true)
+  private lazy val keysConf = projected(values = false)
 
-  private def loadColumn(cf: ColFile): java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])] = {
-    val ids = part.chunkIds.map(java.lang.Long.valueOf).toSet.asJava
-    val pred = FilterApi.in(FilterApi.longColumn("chunk_id"), new java.util.HashSet(ids))
-    val reader = GroupReader.open(new org.apache.hadoop.fs.Path(cf.file), projectedConf,
-      FilterCompat.get(pred))
+  /** Per eq-filtered column: matched row index → the target it equals. */
+  private type Targets = java.util.HashMap[String, java.util.HashMap[Integer, Array[Byte]]]
+
+  /** chunk id → (key blob, value blob or null) of `ids` in `cf`'s file. */
+  private def loadColumn(cf: ColFile, ids: Array[Long],
+      values: Boolean): java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])] = {
+    val idSet = new java.util.HashSet[java.lang.Long]()
+    ids.foreach(id => idSet.add(id))
+    val pred = FilterApi.in(FilterApi.longColumn("chunk_id"), idSet)
+    val reader = GroupReader.open(new org.apache.hadoop.fs.Path(cf.file),
+      if (values) valuesConf else keysConf, FilterCompat.get(pred))
     val out = new java.util.HashMap[java.lang.Long, (Array[Byte], Array[Byte])]()
     try {
       var g = reader.read()
       while (g != null) {
         val cid = g.getLong("chunk_id", 0)
-        val value = if (part.readValues) g.getBinary("value_blob", 0).getBytes else null
+        val value = if (values) g.getBinary("value_blob", 0).getBytes else null
         require(out.put(cid, (g.getBinary("key_blob", 0).getBytes, value)) == null,
           s"file ${cf.file}: duplicate chunk $cid for column ${cf.column}")
         g = reader.read()
@@ -1709,14 +1726,54 @@ private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGr
     out
   }
 
+  /** Rows of one chunk equal to some target of every filter in `eqs`
+    * (exact, never a superset), narrowing `rows` (null = every row).
+    * Records each matched row's target per filtered column in `targets`
+    * and returns the surviving rows, ascending; empty = no row matches.
+    */
+  private def select(eqs: Array[ColEquals], blobOf: ColEquals => Array[Byte], rows: Array[Int],
+      targets: Targets): Array[Int] =
+    eqs.foldLeft(rows) { (sel, e) =>
+      if (sel != null && sel.isEmpty) sel
+      else {
+        // one structural pass resolves the whole IN-list: a row matches
+        // iff it equals SOME target, and each matched index maps to its
+        // target, so the filtered column never decodes
+        val (idx, ords, _) = BytesCodec.selectEqualsIn(blobOf(e), e.targets)
+        val perIdx = new java.util.HashMap[Integer, Array[Byte]]()
+        var j = 0
+        while (j < idx.length) { perIdx.put(idx(j), e.targets(ords(j))); j += 1 }
+        // every surviving row is in this filter's map, so it may replace
+        // an earlier filter's on the same column
+        targets.put(e.column, perIdx)
+        if (sel == null) idx else sel.filter(i => perIdx.containsKey(i))
+      }
+    }
+
   def decodedChunks(): Iterator[DecodedChunk] = {
     val present = part.colFiles.filter(_.file.nonEmpty)
     require(present.nonEmpty || part.colFiles.isEmpty,
       "chunk group with every column absent — planner must anchor on a present column")
-    val byCol = present.map(cf => cf.column -> loadColumn(cf)).toMap
     val wantKey = fields.exists(_.name == "key")
-    val eqApplicable = eqFilters.filter(e => colOf.contains(e.column))
-    part.chunkIds.iterator.zipWithIndex.flatMap { case (cid, chunkIdx) =>
+    val (keyEq, valueEq) =
+      eqFilters.filter(e => e.column == "key" || colOf.contains(e.column)).partition(_.column == "key")
+    // key equality on the anchor's key blobs alone: chunk id → (rows, the
+    // target per row per filter) for each chunk holding a probed key
+    val byKey = new java.util.HashMap[java.lang.Long, (Array[Int], Targets)]()
+    if (keyEq.nonEmpty) {
+      val kb = loadColumn(present(0), part.chunkIds, values = false)
+      part.chunkIds.foreach { cid =>
+        val b = kb.get(cid)
+        require(b != null, s"chunk $cid: no row for column ${present(0).column} in ${present(0).file}")
+        val targets = new Targets()
+        val rows = select(keyEq, _ => b._1, null, targets)
+        if (rows.nonEmpty) byKey.put(cid, (rows, targets))
+      }
+    }
+    val live = if (keyEq.isEmpty) part.chunkIds else part.chunkIds.filter(byKey.containsKey(_))
+    if (live.isEmpty) return Iterator.empty
+    val byCol = present.map(cf => cf.column -> loadColumn(cf, live, part.readValues)).toMap
+    live.iterator.flatMap { cid =>
       // indexed by colFiles position; null for absent (null-padded) columns
       val blobs = part.colFiles.map { cf =>
         if (cf.file.isEmpty) null
@@ -1731,67 +1788,42 @@ private[sources] final class ChunkGroupDecoder(schema: StructType, part: ChunkGr
         require(b == null || java.util.Arrays.equals(b._1, first._1),
           s"chunk $cid: key blobs differ across columns — mixed chunkings")
       }
-      // structural equality pushdown: selectEquals answers byte-column
-      // EqualTo from chunk STRUCTURE (dict membership / RLE run headers /
-      // FSST encoded-probe — exact, never a superset), so a chunk with no
-      // match is skipped without decoding anything, a matching chunk
-      // emits only its matching rows, and the filtered column itself is
-      // never decoded (a matched row's value IS the target)
-      var selected: Array[Int] = null // null = every row
-      var skipChunk = false
-      val eqTarget = new java.util.HashMap[String, java.util.HashMap[Integer, Array[Byte]]]()
-      eqApplicable.foreach { e =>
-        if (!skipChunk) {
-          // one structural pass resolves the whole IN-list: a row matches
-          // iff it equals SOME target, and each matched index maps to its
-          // target, so the column never decodes
-          val (idx, ords, _) = BytesCodec.selectEqualsIn(blobs(colOf(e.column))._2, e.targets)
-          val perIdx = new java.util.HashMap[Integer, Array[Byte]]()
-          var j = 0
-          while (j < idx.length) { perIdx.put(idx(j), e.targets(ords(j))); j += 1 }
-          eqTarget.put(e.column, perIdx)
-          selected =
-            if (selected == null) idx
-            else selected.filter(i => perIdx.containsKey(i))
-          if (selected.isEmpty) skipChunk = true
-        }
-      }
-      if (skipChunk) Iterator.empty
+      val (keyRows, targets) = Option(byKey.get(cid)).getOrElse((null, new Targets()))
+      val selected = select(valueEq, e => blobs(colOf(e.column))._2, keyRows, targets)
+      if (selected != null && selected.isEmpty) Iterator.empty
       else {
-        // decode each fetched column once (eq-filtered columns excluded;
-        // absent evolution-padded columns skipped — they emit NULL)
+        val n = BytesCodec.valueCount(first._1)
+        if (selected != null) require(selected.last < n,
+          s"chunk $cid: selectEquals index ${selected.last} out of $n rows")
+        // the emitted rows' targets per eq-answered column, in emit order
+        val eqTargets = new java.util.HashMap[String, Array[Array[Byte]]]()
+        targets.forEach((c, perIdx) => eqTargets.put(c, selected.map(i => perIdx.get(i))))
+        // decode each fetched column once, only the selected rows of a
+        // byte column (eq-filtered columns excluded; absent
+        // evolution-padded columns skipped — they emit NULL)
         val decodedBytes = new Array[Array[Array[Byte]]](blobs.length)
         val decodedLongs = new Array[LongCodec.LongColumn](blobs.length)
-        var n = -1
         fields.foreach { f =>
-          if (f.name != "key" && !eqTarget.containsKey(f.name)) {
+          if (f.name != "key" && !eqTargets.containsKey(f.name)) {
             colOf.get(f.name).foreach { i =>
               if (f.dataType == LongType || f.dataType == DoubleType) {
                 val c = LongCodec.decode(blobs(i)._2)
+                require(c.n == n, s"chunk $cid: column ${f.name} row count mismatch")
                 decodedLongs(i) = c
-                require(n < 0 || n == c.n, s"chunk $cid: column ${f.name} row count mismatch")
-                n = c.n
               } else {
-                val v = BytesCodec.decode(blobs(i)._2)
-                decodedBytes(i) = v
-                require(n < 0 || n == v.length, s"chunk $cid: column ${f.name} row count mismatch")
-                n = v.length
+                require(BytesCodec.valueCount(blobs(i)._2) == n,
+                  s"chunk $cid: column ${f.name} row count mismatch")
+                decodedBytes(i) = BytesCodec.decode(blobs(i)._2, selected)
               }
             }
           }
         }
-        val keys: Array[Array[Byte]] = if (wantKey) {
-          val k = BytesCodec.decode(first._1)
-          require(n < 0 || n == k.length, s"chunk $cid: key/value row count mismatch")
-          n = k.length
-          k
-        } else null
-        if (n < 0) n = part.nRows(chunkIdx).toInt // only eq columns fetched
-        // emit == null = every row (the common no-eq-filter path pays no
-        // index array and no indirection)
-        if (selected != null) require(selected.isEmpty || selected.last < n,
-          s"chunk $cid: selectEquals index ${selected.last} out of $n rows")
-        Iterator.single(DecodedChunk(cid, n, selected, keys, decodedBytes, decodedLongs, eqTarget))
+        // a probed key IS its target: the key blob decodes only otherwise
+        val keys: Array[Array[Byte]] =
+          if (!wantKey) null
+          else if (eqTargets.containsKey("key")) eqTargets.get("key")
+          else BytesCodec.decode(first._1, selected)
+        Iterator.single(DecodedChunk(cid, n, selected, keys, decodedBytes, decodedLongs, eqTargets))
       }
     }
   }
@@ -1834,9 +1866,9 @@ final class ChunkGroupReader(schema: StructType, part: ChunkGroupPartition,
             val f = fields(fi)
             arr(fi) =
               if (f.name == FsstScan.ChunkIdCol) d.cid
-              else if (f.name == "key") UTF8String.fromBytes(d.keys(ri))
+              else if (f.name == "key") UTF8String.fromBytes(d.keys(j))
               else if (d.eqTargets.containsKey(f.name)) {
-                val t = d.eqTargets.get(f.name).get(ri)
+                val t = d.eqTargets.get(f.name)(j)
                 if (f.dataType == StringType) UTF8String.fromBytes(t) else t
               } else dec.colOf.get(f.name) match {
                 case None => null // column absent here (added after this batch)
@@ -1849,10 +1881,10 @@ final class ChunkGroupReader(schema: StructType, part: ChunkGroupPartition,
                       val c = d.longCols(i)
                       if (c.nulls(ri)) null else java.lang.Double.longBitsToDouble(c.values(ri))
                     case StringType =>
-                      val b = d.bytesCols(i)(ri)
+                      val b = d.bytesCols(i)(j)
                       if (b == null) null else UTF8String.fromBytes(b)
                     case _ =>
-                      d.bytesCols(i)(ri)
+                      d.bytesCols(i)(j)
                   }
               }
             fi += 1

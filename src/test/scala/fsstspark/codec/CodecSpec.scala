@@ -302,6 +302,77 @@ class CodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { BytesCodec.decode(java.util.Arrays.copyOf(dict, 20)) }
   }
 
+  test("property: decode(blob, rows) equals decode(blob) at rows for every codec") {
+    val rnd = new scala.util.Random(20261020)
+    val lowCard = (0 until 300).map(i => if (i % 11 == 0) null else Seq("A", "N", "R")(i % 3).getBytes(UTF_8)).toArray
+    val runs = (0 until 300).map(i => if (i >= 140 && i < 160) null else (if (i < 150) "X" else "Y").getBytes(UTF_8)).toArray
+    val empties = Array("".getBytes(UTF_8), null, "".getBytes(UTF_8), "a".getBytes(UTF_8))
+    val encoders = Seq[(String, Array[Array[Byte]] => Array[Byte])]("raw" -> BytesCodec.encodeRaw,
+      "fsst" -> BytesCodec.encodeFsst, "dict" -> BytesCodec.encodeDict, "rle" -> BytesCodec.encodeRle)
+    for (vs <- Seq(textValues, withNulls, lowCard, runs, empties); (name, enc) <- encoders) {
+      val blob = enc(vs)
+      val full = BytesCodec.decode(blob)
+      val n = vs.length
+      val subsets = Seq(Array.emptyIntArray, Array(rnd.nextInt(n)), Array(0), Array(n - 1),
+        Array.range(0, n)) ++
+        Seq.fill(6)(Array.range(0, n).filter(_ => rnd.nextInt(4) == 0)) ++
+        Seq(Array.range(0, n).filter(i => vs(i) == null))
+      for (rows <- subsets) {
+        val got = BytesCodec.decode(blob, rows)
+        assert(got.length == rows.length, s"$name: ${got.length} values for ${rows.length} rows")
+        rows.indices.foreach { j =>
+          val want = full(rows(j))
+          assert(if (want == null) got(j) == null else java.util.Arrays.equals(got(j), want),
+            s"$name: row ${rows(j)} differs from the full decode")
+        }
+      }
+      // rows out of range or out of order are refused, not misread
+      for (bad <- Seq(Array(n), Array(-1), Array(1, 0), Array(0, 0)))
+        intercept[IllegalArgumentException](BytesCodec.decode(blob, bad))
+    }
+  }
+
+  /** An FSST blob rebuilt from its parts, with `lens(i)` = varint(encLen+1). */
+  private def fsstBlob(n: Int, table: Array[Byte], orig: Long, lens: Array[Int],
+      data: Array[Byte]): Array[Byte] = {
+    val b = new ByteArrayBuilder(64)
+    b.addByte(BytesCodec.FSST); b.addVarInt(n); b.addVarInt(table.length); b.addBytes(table)
+    b.addVarLong(orig); lens.foreach(b.addVarInt); b.addBytes(data)
+    b.result()
+  }
+
+  test("hostile input: the row-subset decode raises on every corrupt FSST blob the full decode does") {
+    val blob = BytesCodec.encodeFsst(textValues)
+    val r = new fsstspark.util.ByteReader(blob)
+    r.readByte()
+    val n = r.readVarInt()
+    val table = r.readBytes(r.readVarInt())
+    val orig = r.readVarLong()
+    val lensAt = r.pos
+    val lens = Array.fill(n)(r.readVarInt())
+    val data = java.util.Arrays.copyOfRange(blob, r.pos, blob.length)
+    assert(java.util.Arrays.equals(fsstBlob(n, table, orig, lens, data), blob), "parts rebuild the blob")
+    val some = Array(0, n / 2, n - 1)
+    def raises(what: String, corrupt: Array[Byte], rows: Array[Int]): Unit = {
+      val e = intercept[Exception](BytesCodec.decode(corrupt, rows))
+      assert(e.isInstanceOf[IllegalArgumentException] || e.isInstanceOf[IndexOutOfBoundsException],
+        s"$what: unclean failure $e")
+    }
+    for (rows <- Seq(some, Array(n / 2), Array.emptyIntArray)) {
+      // a truncated length list: the blob ends inside it
+      raises("truncated length list", java.util.Arrays.copyOf(blob, lensAt + n / 3), rows)
+      // an encoded length past the blob end, on a row the subset skips
+      val longLen = lens.clone()
+      longLen(n / 4) = data.length + 2
+      raises("length past the blob end", fsstBlob(n, table, orig, longLen, data), rows)
+      // an inflated declared size: more than 8 output bytes per blob byte
+      raises("inflated declared size", fsstBlob(n, table, 8L * blob.length + 1, lens, data), rows)
+    }
+    // a deflated declared size: the selected value outgrows the buffer
+    // sized from it, and the kernel's dst guard fires
+    raises("deflated declared size", fsstBlob(n, table, 1, lens, data), Array(n / 2))
+  }
+
   test("stats long-value escape: mostly-unique large values stop distinct hashing, low-card keeps dict") {
     val rnd = new scala.util.Random(33)
     // ~8 MB of unique ~1 MB documents: no chunk-local dict can win; the

@@ -1773,6 +1773,153 @@ class DataSourceSpec extends AnyFunSuite {
       EncodePipeline.decodeColumns(tIo.readChunks(spark, "pages"), pageReadSpecs).collect())
   }
 
+  /** Three committed batches of the pages fixture (split by doc id), each
+    * in hash order: every chunk spans most of the key space, so key
+    * min/max pruning keeps most chunks of a point read.
+    */
+  private def unsortedBatches(root: String, chunkBytes: Long): ParquetTableIO = {
+    val io = new ParquetTableIO(root)
+    (0 until 3).foreach { i =>
+      io.writeChunks(EncodePipeline.encodeColumnsLocal(
+        pagesDf.filter((col("ts") / 1000) % 3 === i).orderBy(xxhash64(col("url"))).coalesce(1),
+        col("url"), pageSpecs, chunkBytes), "pages")
+    }
+    io
+  }
+
+  /** The rows of `df`, each rendered as one comparable string, sorted. */
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.map {
+    case b: Array[Byte] => b.mkString(",")
+    case v => String.valueOf(v)
+  }.mkString("|")).toSeq.sorted
+
+  private def sqlString(s: String): String = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+  test("key = and IN through the connector and SQL equal the same query with the key filter hidden") {
+    val root = freshRoot()
+    val io = unsortedBatches(root, 8L << 10)
+    val batch0 = pagesDf.filter((col("ts") / 1000) % 3 === 0)
+    // five keys of the first batch appended again with a new ts: each is
+    // live in two batches
+    val again = batch0.orderBy("url").limit(5)
+    io.writeChunks(EncodePipeline.encodeColumnsLocal(
+      again.withColumn("ts", col("ts") + 1).coalesce(1), col("url"), pageSpecs, 8L << 10), "pages")
+    // one chunk of the second batch tombstoned
+    val batch1 = io.committedBatchIds(spark, "pages").sorted.apply(1)
+    val victim = io.manifest(spark, "pages")
+      .filter(col("column") === "text" && col("file").contains(s"batch=$batch1/"))
+      .orderBy("chunk_id").first()
+    io.removeChunks(spark, "pages", io.manifest(spark, "pages")
+      .filter(col("chunk_id") === victim.getAs[Long]("chunk_id")).select("chunk_id", "column"))
+    val repeated = again.first().getString(0)
+    val dead = victim.getAs[String]("min_key")
+    val single = pagesDf.filter((col("ts") / 1000) % 3 === 2).orderBy("url").first().getString(0)
+    val absent = "https://nowhere.example/doc/none"
+    // the fixture's chunk ranges overlap: min/max pruning keeps several
+    // chunks for one key, so the reader's key answer is what narrows
+    val tbl = FsstDataSource.resolve(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("root", root, "table", "pages")))
+    val sb = new FsstScanBuilder(root, "pages", tbl.schema(), 8)
+    sb.pruneColumns(StructType(Seq(StructField("key", StringType), StructField("text", StringType))))
+    sb.pushFilters(Array(EqualTo("key", single)))
+    val planned = sb.build().asInstanceOf[FsstScan].planInputPartitions()
+      .map(_.asInstanceOf[ChunkGroupPartition].chunkIds.length).sum
+    assert(planned > 2, s"a point read planned only $planned chunks: ranges do not overlap")
+
+    val conn = spark.read.format("fsst").option("root", root).option("table", "pages")
+      .option("stringColumns", "text").load()
+    // an identity UDF: Spark pushes no filter through it
+    val hide = udf((s: String) => s)
+    spark.udf.register("fsst_hide", (s: String) => s)
+    val cat = catalogOn(root, "fsst_keyeq")
+    def same(what: String, pushed: DataFrame, hidden: DataFrame): Int = {
+      val (a, b) = (rowsOf(pushed), rowsOf(hidden))
+      assert(a == b, s"$what: pushed key filter returned ${a.length} rows, hidden ${b.length}")
+      a.length
+    }
+    val expect = Seq(single -> 1, repeated -> 2, dead -> 0, absent -> 0)
+    for ((k, n) <- expect) {
+      assert(same(s"connector key = $k", conn.filter(col("key") === k),
+        conn.filter(hide(col("key")) === k)) == n, s"connector key = $k")
+      assert(same(s"SQL key = $k", spark.sql(s"SELECT * FROM $cat.pages WHERE key = ${sqlString(k)}"),
+        spark.sql(s"SELECT * FROM $cat.pages WHERE fsst_hide(key) = ${sqlString(k)}")) == n,
+        s"SQL key = $k")
+    }
+    val keys = expect.map(_._1)
+    val inList = keys.map(sqlString).mkString(", ")
+    assert(same("connector key IN", conn.filter(col("key").isin(keys: _*)),
+      conn.filter(hide(col("key")).isin(keys: _*))) == 3)
+    assert(same("SQL key IN", spark.sql(s"SELECT * FROM $cat.pages WHERE key IN ($inList)"),
+      spark.sql(s"SELECT * FROM $cat.pages WHERE fsst_hide(key) IN ($inList)")) == 3)
+    // key only (value_blob never read), and key with a value equality
+    assert(same("SQL key-only IN", spark.sql(s"SELECT key FROM $cat.pages WHERE key IN ($inList)"),
+      spark.sql(s"SELECT key FROM $cat.pages WHERE fsst_hide(key) IN ($inList)")) == 3)
+    val text = again.first().getString(again.columns.indexOf("text"))
+    assert(same("connector key IN and text =",
+      conn.filter(col("key").isin(keys: _*) && col("text") === text),
+      conn.filter(hide(col("key")).isin(keys: _*) && col("text") === text)) >= 2)
+  }
+
+  test("a point read loads no value column of a chunk without the key: a flipped byte there goes unread") {
+    val root = freshRoot()
+    val io = unsortedBatches(root, 1L << 30) // one chunk per batch
+    val chunks = io.manifest(spark, "pages").filter(col("column") === "text").orderBy("file").collect()
+    assert(chunks.length == 3, s"expected one chunk per batch: ${chunks.length}")
+    val flipped = chunks(0)
+    val (keyIn, hi) = (flipped.getAs[String]("min_key"), flipped.getAs[String]("max_key"))
+    val read = spark.read.format("fsst").option("root", root).option("table", "pages")
+      .option("stringColumns", "text").load()
+    // a key of another chunk inside the flipped chunk's key range, so the
+    // flipped chunk is planned and its key blob read
+    val keyOther = read.filter(col(FsstScan.ChunkIdCol) =!= flipped.getAs[Long]("chunk_id") &&
+        col("key") > keyIn && col("key") < hi)
+      .agg(min("key")).first().getString(0)
+    assert(keyOther != null, "no key of another chunk inside the flipped chunk's range")
+    flipMidByte(flipped.getAs[String]("file"), "value_blob")
+    // only the text column: its file holds the flipped chunk, whose key
+    // blob this read must check
+    for (cols <- Seq(Seq("key", "text"), Seq("key", "text", "html", "ts"))) {
+      val got = rowsOf(read.filter(col("key") === keyOther).select(cols.map(col): _*))
+      val want = rowsOf(pagesDf.filter(col("url") === keyOther)
+        .select((col("url").as("key") +: cols.tail.map(col)): _*))
+      assert(got == want && got.length == 1, s"point read of $keyOther over ${cols.mkString(",")}")
+    }
+    failsOnChecksum("point read of a key in the flipped chunk")(
+      read.filter(col("key") === keyIn).select("key", "text").collect())
+    failsOnChecksum("scan")(read.select("key", "text").collect())
+  }
+
+  test("row-level UPDATE and DELETE by key leave the other rows of the chunk identical") {
+    val root = freshRoot()
+    val df = spark.range(1000).select(
+      format_string("https://guard.example/doc/%05d", col("id")).as("url"),
+      concat(lit("text of page "), col("id")).as("text"),
+      encode(concat(lit("<html>"), col("id"), lit("</html>")), "UTF-8").as("html"),
+      (col("id") * 1000L).as("ts"), (col("id") / 3.0).as("score"))
+    val io = writeTable(df.coalesce(1), root, "pages", 1L << 30)
+    val m = io.manifest(spark, "pages").filter(col("column") === "text").collect()
+    assert(m.length == 1 && m(0).getAs[Long]("n_rows") == 1000L, "one 1,000-row chunk")
+    val cat = catalogOn(root, "fsst_guard")
+    val (updKey, delKey) = ("https://guard.example/doc/00417", "https://guard.example/doc/00733")
+    // count and checksum of every row but `keys`
+    def digest(keys: String*): (Long, Long) = {
+      val r = spark.table(s"$cat.pages").filter(!col("key").isin(keys: _*))
+        .agg(count(lit(1)), sum(crc32(concat_ws("|", col("key"), col("text"), hex(col("html")),
+          col("ts").cast("string"), col("score").cast("string"))))).first()
+      (r.getLong(0), r.getLong(1))
+    }
+    val before = digest(updKey, delKey)
+    assert(before._1 == 998L)
+    spark.sql(s"UPDATE $cat.pages SET ts = ts + 1 WHERE key = '$updKey'")
+    assert(spark.table(s"$cat.pages").count() == 1000L, "UPDATE changed the row count")
+    assert(digest(updKey, delKey) == before, "UPDATE changed rows it did not match")
+    assert(spark.table(s"$cat.pages").filter(col("key") === updKey).select("ts").first()
+      .getLong(0) == 417001L)
+    spark.sql(s"DELETE FROM $cat.pages WHERE key = '$delKey'")
+    assert(spark.table(s"$cat.pages").count() == 999L, "DELETE removed other rows")
+    assert(digest(updKey, delKey) == before, "DELETE changed rows it did not match")
+  }
+
   test("local catalog writes fork no chmod and leave the .crc sidecars Hadoop writes") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
